@@ -1,59 +1,56 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps formatted physical plans for EVERY registered query into
-  * PLANS.md — the evidence trail for the plan shapes SCALE.md claims
-  * (pushdown, broadcast, partial aggregation, top-k, no cartesian
-  * products). Run after plan-affecting changes; the committed file is the
-  * review artifact. The `Headline` list below documents which queries
-  * carry which plan-shape claims (all of them are included in the dump
-  * along with the rest of the catalog). */
+/** Dumps formatted physical plans of registered queries — the evidence
+  * trail for the plan shapes SCALE.md claims (pushdown, broadcast,
+  * partial aggregation, top-k, no cartesian products). Two modes:
+  *
+  *   runMain graft.Plans [sfDir]
+  *     every query into PLANS.md, the committed record of plan shapes; run it
+  *     after plan-affecting changes;
+  *   runMain graft.Plans <sfDir> <regex> <outDir> <tag>
+  *     each query whose name matches `regex` into
+  *     `<outDir>/<query>_<tag>.txt` (e.g. the before/after plan pairs
+  *     of a plan change under `plans/r14`).
+  *
+  * Sessions are `local[8]`, so the dumped partition counts do not depend
+  * on the host. */
 object Plans {
-  val Headline = Vector(
-    "q_a1_tpch_q1", "q_j_tpch_q3", "q_j2_region_revenue", "q_p4_filter",
-    "q_w1_topk", "q_x_bm25", "q_x_decontam", "q_x_minhash_neardup",
-    "q_s_gapfill", "q_v_lsh_ann",
-    // round-4 de-windowed ranking paths: every one must show TakeOrdered /
-    // range-partitioned prefix sums, never a partition-less WindowExec
-    "q_j_basket", "q_t8_spearman", "q_t_pr_curve", "q_w9_percent_rank",
-    "q_x_tfidf_search",
-    // round-4b TPC-H/warehouse additions: semi-join EXISTS, star-join
-    // ratio share, multi-level agg, and the topKRanked PMI path
-    "q_j_tpch_q4", "q_j_tpch_q8", "q_j_tpch_q21", "q_x_pmi_bigrams",
-    // round-6: heap-aggregate top-k (partial+final ObjectHashAggregate,
-    // no window), int8 ANN (broadcast queries + heap aggregate), and the
-    // directional ingest-dedup band join
-    "q_w_topk_agg", "q_v_int8_ann", "q_x_ingest_dedup", "q_v_pq_codes",
-    // round-7: the end-to-end IVF-PQ ADC search (broadcast LUT join +
-    // partial+final TopKRows, no window) and the heap-ranked brute ANN
-    "q_v_pqadc_ann", "q_v_knn_brute")
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val pick = args.lift(1).map(_.r)
+    val spark = graft.core.Session.local(sfDir, cpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb ++= "# PLANS — formatted physical plans of every registered query\n\n"
-    sb ++= s"Generated by `graft.Plans` over `$sfDir` (plan SHAPE is scale-\n"
-    sb ++= "independent: the same operators appear at any input size; only\n"
-    sb ++= "AQE's runtime partition numbers change).\n"
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val plan =
-        try SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    def plan(name: String): String = {
+      val p =
+        try SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
         catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}\n" }
-      sb ++= s"\n## $name\n\n```\n$plan```\n"
       graft.ops.Leaks.sweep(spark)
+      p
     }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"),
-      sb.toString)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => pick.forall(_.findFirstIn(n).isDefined))
+    args.drop(1) match {
+      case Array() =>
+        val sb = new StringBuilder
+        sb ++= "# PLANS — formatted physical plans of every registered query\n\n"
+        sb ++= s"Generated by `graft.Plans` over `$sfDir` (plan SHAPE is scale-\n"
+        sb ++= "independent: the same operators appear at any input size; only\n"
+        sb ++= "AQE's runtime partition numbers change).\n"
+        names.foreach(n => sb ++= s"\n## $n\n\n```\n${plan(n)}```\n")
+        Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      case Array(_, outDir, tag) =>
+        Files.createDirectories(Paths.get(outDir))
+        names.foreach(n =>
+          Files.writeString(Paths.get(outDir, s"${n}_$tag.txt"), plan(n)))
+      case _ =>
+        System.err.println(
+          "usage: graft.Plans [sfDir] | graft.Plans <sfDir> <regex> <outDir> <tag>")
+        sys.exit(2)
+    }
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,25 +18,7 @@ object Verify {
     def matched(name: String) =
       nameFilter.forall(_.findFirstIn(name).isDefined)
     def keep(name: String) = matched(name) && !done(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // partitions are sized to DATA, not cores, past sf1: at sf10 the
-      // 100M-row edge relations need ≥96 partitions to keep per-task
-      // sorts inside execution memory (found by the sf10 gate — 24
-      // partitions OOM'd q_g_pagerank); AQE coalesces small stages back.
-      // graft.core.Sizing computes the count from the sf dir's bytes
-      // (128 MiB of expanded input per partition, clamped to cores);
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS stays as an explicit override.
-      .config("spark.sql.shuffle.partitions",
-        graft.core.Sizing.shufflePartitions(sfDir, cpus.toInt))
-      // shuffle scratch override only (SPARK_GRAFT_LOCAL_DIR; Sizing.localDir doc)
-      .config(graft.core.Sizing.localDir(sfDir).map("spark.local.dir" -> _).toMap)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.local(sfDir, graft.core.Session.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()

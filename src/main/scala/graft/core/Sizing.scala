@@ -42,7 +42,8 @@ import org.apache.hadoop.fs.{FileStatus, Path}
   * never throw on a sizing probe.
   *
   * SPARK_GRAFT_SHUFFLE_PARTITIONS remains an explicit override for
-  * experiments; absent it, Verify/Bench/IsoBench size from the sf dir. */
+  * experiments; absent it, every session built by [[Session.local]] sizes
+  * from the sf dir. */
 object Sizing {
   val TargetPartitionBytes: Long = 128L * 1024 * 1024
 
@@ -147,25 +148,6 @@ object Sizing {
                         conf: Configuration = new Configuration()): Int =
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
       .getOrElse(partitionsForExpanded(expandedBytes(sfDir, conf), cores))
-
-  /** Shuffle scratch directory (spark.local.dir) override for a session
-    * reading `sfDir`: SPARK_GRAFT_LOCAL_DIR when set, else Spark's
-    * default. The r13 tmpfs auto-pick (/dev/shm whenever expanded input
-    * ≤ 4 GiB) is GONE: the r13 driver run — the first with it active —
-    * blew q_x_decontam/q_x_bm25/q_x_embed_neardup up 1.6-6× at 32 cores
-    * while its own 8-core run and both builder runs stayed flat, and the
-    * gate checked input size only, never the host's free RAM or tmpfs
-    * quota (a cgroup-limited sandbox charges tmpfs pages against the
-    * container's memory, so RAM-backed shuffle scratch competes with the
-    * executor heap under exactly the 32-thread load that showed the
-    * regression). The r14 same-host A/B measured the auto-pick's local
-    * upside at ~9% on the shuffle-heavy subset (14.5 s vs 15.8 s) —
-    * a sandbox-only config lever, not worth a 4× risk on a loaded
-    * driver host, and no help to any real cluster (which sets
-    * spark.local.dir to its fast local disks as usual). */
-  def localDir(sfDir: String,
-               conf: Configuration = new Configuration()): Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").filter(_.nonEmpty)
 
   /** Scale-conditional read-parallelism repair (optimization-guide §2.5,
     * "input skew — one huge unsplittable file"): a single-row-group

@@ -11,12 +11,6 @@ import graft.ops.Cleaning
   */
 object Ensemble {
 
-  /** Join prediction frames (id, pred) into one wide frame id, p0..p(n-1). */
-  def alignPredictions(idCol: String, preds: Seq[DataFrame]): DataFrame =
-    preds.zipWithIndex.map { case (df, i) =>
-      df.select(col(idCol), col(df.columns.filter(_ != idCol).head).as(s"p$i"))
-    }.reduce(_.join(_, Seq(idCol)))
-
   private def predCols(df: DataFrame, idCol: String): Seq[Column] =
     df.columns.filter(_ != idCol).map(col).toSeq
 

@@ -1,70 +1,14 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.GBTClassifier
 import org.apache.spark.ml.feature.{PCA, VectorAssembler}
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sim.Similarity
 
 /** Remaining model-surface items from SURVEY.md §2.7-2.8 that need
   * composition rather than a single MLlib estimator. */
 object Extras {
-
-  /** L9 — KNN classifier as a relational plan (MLlib has none): broadcast
-    * the query rows against the train corpus, take the k nearest by cosine,
-    * majority-vote the label (ties → smallest label). Exact; for large
-    * query sets switch the neighbor search to Similarity.lshTopK. */
-  def knnPredict(train: DataFrame, queries: DataFrame, k: Int,
-                 idCol: String, vecCol: String, labelCol: String): DataFrame = {
-    val neighbors = Similarity.bruteForceTopK(
-      train, queries, k, idCol, vecCol)
-    val labeled = neighbors.join(
-      train.select(col(idCol).as("neighbor_id"), col(labelCol).as("__nl")),
-      Seq("neighbor_id"))
-    val votes = labeled.groupBy(col("query_id"), col("__nl"))
-      .agg(count(lit(1)).as("votes"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("votes").desc, col("__nl").asc)
-    votes.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select(col("query_id").as(idCol), col("__nl").as("knn_prediction"))
-  }
-
-  /** L5 — multiclass gradient boosting via one-vs-rest GBTs (MLlib GBT is
-    * binary-only; SURVEY §7.4 hard part 4). Each class trains a binary
-    * this-vs-rest model; prediction = argmax of the positive-class
-    * probabilities, ties → smallest class. */
-  def ovrGbtFit(train: DataFrame, featureCols: Seq[String], labelCol: String,
-                classes: Seq[Double], maxIter: Int = 20):
-      Seq[(Double, org.apache.spark.ml.PipelineModel)] =
-    classes.map { c =>
-      val bin = train.withColumn("__ovr",
-        when(col(labelCol) === c, 1.0).otherwise(0.0))
-      val pipe = Models.pipelineFor(
-        new GBTClassifier().setMaxIter(maxIter).setMaxDepth(5).setSeed(42),
-        featureCols, "__ovr")
-      c -> pipe.fit(bin)
-    }
-
-  def ovrGbtPredict(models: Seq[(Double, org.apache.spark.ml.PipelineModel)],
-                    df: DataFrame, idCol: String): DataFrame = {
-    // index-named prob columns (class labels are doubles — "__p_0.0" would
-    // parse as a struct field access)
-    val scored = models.zipWithIndex.foldLeft(df) { case (acc, ((_, m), i)) =>
-      acc.join(
-        m.transform(df).select(col(idCol),
-          element_at(vector_to_array(col("probability")), 2).as(s"__p_$i")),
-        Seq(idCol))
-    }
-    val probCols = models.zipWithIndex.map { case ((c, _), i) => (c, col(s"__p_$i")) }
-    val best = probCols.map(_._2).reduce(greatest(_, _))
-    val pred = probCols.foldRight(lit(null).cast("double")) {
-      case ((c, p), acc) => when(p === best, lit(c)).otherwise(acc)
-    }
-    scored.withColumn("ovr_prediction", pred)
-      .drop(models.indices.map(i => s"__p_$i"): _*)
-  }
 
   /** Global 1..n rank by a hash key WITHOUT any single-partition window:
     * rank inside 256 hash-prefix buckets in parallel, then add per-bucket
@@ -89,11 +33,12 @@ object Extras {
       .drop("__h", "__b", "__lr", "__off")
   }
 
-  /** M14 — permutation importance: shuffle ONE feature column (deterministic
-    * md5-rank rotation — a derangement-free but uniform permutation), score,
-    * Δ = base metric − permuted metric. Distributed: the permutation is a
-    * self-join on shifted ranks, never a driver materialization nor a
-    * single-partition global sort (see [[hashRank]]).
+  /** Permute ONE feature column (deterministic md5-rank rotation — a
+    * derangement-free but uniform permutation), the step M14 permutation
+    * importance repeats per feature (the catalog's exact M14 is
+    * `q_m14_perm_importance` in R10Queries). Distributed: the
+    * permutation is a self-join on shifted ranks, never a driver
+    * materialization nor a single-partition global sort (see [[hashRank]]).
     * Ref: wine nb 11 cell 46. */
   def permuteColumn(df: DataFrame, idCol: String, c: String, seed: Int): DataFrame = {
     val ranked = hashRank(df, idCol, seed, "__rn")
@@ -102,19 +47,6 @@ object Extras {
       (pmod(col("__rn"), lit(n)) + 1).as("__rn"), col(c).as("__perm"))
     ranked.join(shifted, Seq("__rn"))
       .drop(c, "__rn").withColumnRenamed("__perm", c)
-  }
-
-  def permutationImportance(fitted: org.apache.spark.ml.PipelineModel,
-                            df: DataFrame, idCol: String, labelCol: String,
-                            featureCols: Seq[String], nRepeats: Int = 3): Seq[(String, Double)] = {
-    val base = Models.evaluate(fitted.transform(df), labelCol)
-    featureCols.map { c =>
-      val deltas = (0 until nRepeats).map { r =>
-        val permuted = permuteColumn(df, idCol, c, seed = 1000 + r)
-        base - Models.evaluate(fitted.transform(permuted), labelCol)
-      }
-      c -> deltas.sum / nRepeats
-    }
   }
 
   /** M15 — PCA projection of assembled features to `k` components. */

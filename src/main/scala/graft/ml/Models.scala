@@ -4,7 +4,6 @@ import org.apache.spark.ml.{Pipeline, PipelineModel, Estimator, Transformer}
 import org.apache.spark.ml.classification._
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.{Vector => MlVector}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,11 +55,6 @@ object Models {
     new Pipeline().setStages(
       if (scale) Array(assembler, scaler, m) else Array(assembler, m))
   }
-
-  /** Turn an Array[Float] embedding column into an MLlib vector column. */
-  def withVectorFeatures(df: DataFrame, arrayCol: String,
-                         out: String = "features_raw"): DataFrame =
-    df.withColumn(out, array_to_vector(col(arrayCol)))
 
   /** Accuracy / F1 of a fitted model's predictions. */
   def evaluate(pred: DataFrame, labelCol: String, metric: String = "accuracy"): Double =

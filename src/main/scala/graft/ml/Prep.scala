@@ -240,10 +240,6 @@ object Prep {
       acc.withColumn(s"${c}_$v", when(col(c) === v, 1).otherwise(0))
     }
 
-  def fitCategories(train: DataFrame, c: String): Seq[String] =
-    train.select(col(c).cast("string")).filter(col(c).isNotNull)
-      .distinct().orderBy(col(c)).collect().map(_.getString(0)).toSeq
-
   /** A15/A16 — Pearson correlation matrix over `cols` in ONE aggregation
     * pass (all pairwise exact-decimal sums), returned as a (col_a, col_b,
     * corr) relation. O(k²) aggregate expressions, one shuffle-free pass —

@@ -206,7 +206,7 @@ object CorpusBuild {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = PipelineSession.build()
+    val spark = PipelineSession.build(sfDir)
     val c = run(spark, sfDir, outDir)
     println(s"[corpus] raw=${c.raw} quality=${c.quality} lang=${c.langOk} " +
       s"lm=${c.lmOk} " +

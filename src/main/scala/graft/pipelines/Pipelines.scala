@@ -17,16 +17,8 @@ import graft.ensemble.Ensemble
   *   runMain graft.pipelines.Tournament <sfDir> <outDir>   (EP3)
   */
 object PipelineSession {
-  def build(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+  def build(sfDir: String): SparkSession = {
+    val s = graft.core.Session.local(sfDir, graft.core.Session.envCpus)
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -86,7 +78,7 @@ object Etl {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = PipelineSession.build()
+    val spark = PipelineSession.build(sfDir)
     val out = run(spark, sfDir, outDir)
     println(s"[etl] wrote ${out.count()} rows to $outDir")
     spark.stop()
@@ -146,7 +138,7 @@ object Experiment {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = PipelineSession.build()
+    val spark = PipelineSession.build(sfDir)
     val out = run(spark, sfDir, outDir).collect()
     out.foreach(r => println(s"[experiment] best: $r"))
     spark.stop()
@@ -193,7 +185,7 @@ object Tournament {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = PipelineSession.build()
+    val spark = PipelineSession.build(sfDir)
     val out = run(spark, sfDir, outDir)
     out.show(20, false)
     spark.stop()

@@ -25,7 +25,7 @@ import graft.text.{Bpe, NbClassifier, TextOps}
   * replace-to-fixpoint), NB as one statement sharing q_x_lm_quality's
   * tokenization SQL.
   */
-object BpeQueries {
+object BpeQueries extends QueryPack {
 
   /** Merge-table size. Small enough that the oracle chain stays
     * readable; large enough that multi-character subwords ("er$", "ow$")

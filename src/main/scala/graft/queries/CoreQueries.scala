@@ -33,7 +33,7 @@ object Sql {
 /** Core relational operator queries (SURVEY.md §2.2-2.6) with DuckDB
   * oracles, over the driver test tables. Every query has a total
   * deterministic ORDER BY so results are reproducible row-for-row. */
-object CoreQueries {
+object CoreQueries extends QueryPack {
   import Num._
 
   private val priorities =

@@ -20,7 +20,7 @@ import graft.text.{Dsir, TextOps}
   *    (Rae et al. 2021, appendix A) as per-source rejection counts —
   *    one narrow codegen'd map pass, then a single aggregation.
   */
-object DsirQueries {
+object DsirQueries extends QueryPack {
   import TextSimQueries.normToksSql
 
   /** The curated "target" slice DSIR aims the raw corpus at. Any

@@ -69,7 +69,7 @@ import graft.ml.{Forest, HistTree, Split}
   * ml/Forest); everything after the ladder is fitted-parameter algebra
   * on an 8-row store plus one broadcast-joined scoring pass per config.
   */
-object Ep2Queries {
+object Ep2Queries extends QueryPack {
   private val D = 4   // quantized embedding dims used as features
   private val K = 5   // stratified fold deal; fold 0 = the 20% holdout
   private val TB = 32 // tree/forest histogram bins

@@ -27,7 +27,7 @@ import graft.text.TextOps
   * (1-1.data_processing.ipynb cells 6-11); the dedup stack follows
   * Lee et al. 2022 (exact-substring) and SemDeDup (Abbas et al. 2023).
   */
-object Ep4Queries {
+object Ep4Queries extends QueryPack {
 
   private val SemTargetCluster = 500L
 

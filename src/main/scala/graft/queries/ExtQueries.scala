@@ -12,7 +12,7 @@ import graft.ops.Num.dsum
   * retrieval, and funnel analysis — each the Spark-first shape of an
   * operation a large-scale data pipeline runs daily.
   */
-object ExtQueries {
+object ExtQueries extends QueryPack {
   import Sql._
 
   /** Fixed retrieval query for q_x_tfidf_search (corpus vocabulary terms

@@ -20,7 +20,7 @@ import graft.ml.Forest
   * Ref: cross-validation/wine_analysis.py:245-343 (tournament),
   * src/models/random_forest.py (the rf surface being modeled).
   */
-object ForestQueries {
+object ForestQueries extends QueryPack {
   private val D = 4        // quantized embedding dims used as features
   private[queries] val T = 4        // trees
   private[queries] val Depth = 3

@@ -11,7 +11,7 @@ import graft.ensemble.Ensemble
   * and the ensemble combinator family (SURVEY.md §2.9) as oracle-checked
   * queries. Ensemble "model predictions" are deterministic arithmetic
   * transforms of events.value, so every blend is exactly reproducible. */
-object MlQueries {
+object MlQueries extends QueryPack {
   import Num._
   import Sql._
 

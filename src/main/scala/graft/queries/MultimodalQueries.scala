@@ -8,7 +8,7 @@ import graft.multimodal.Multimodal
 /** Multimodal-column queries over fake binary media derived from the
   * documents table. Frame sampling is pure expression → oracle-checked;
   * the stub-decode feature extraction involves JVM hashing → rows-only. */
-object MultimodalQueries {
+object MultimodalQueries extends QueryPack {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Binary frame sampling: chunk + stride select, all in expressions.

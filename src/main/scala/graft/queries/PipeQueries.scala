@@ -14,7 +14,7 @@ import graft.text.{Retrieval, TextOps}
   * shape of an operation a 100 TB corpus/analytics pipeline runs daily,
   * each with a bit-exact DuckDB oracle.
   */
-object PipeQueries {
+object PipeQueries extends QueryPack {
   import Sql._
 
   /** Co-purchase pair counts (part_a < part_b bought in the same order,

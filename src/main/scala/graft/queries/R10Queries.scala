@@ -26,7 +26,7 @@ import graft.ml.{ElasticNet, Extras, Forest, HistGbtR, HistTree, IsoForest}
   * surfaces being modeled); subsampled split finding is the standard
   * large-scale move of PLANET §4 / LightGBM's histogram sampling.
   */
-object R10Queries {
+object R10Queries extends QueryPack {
   private val D = 4
   private val SubCap = 300L
 

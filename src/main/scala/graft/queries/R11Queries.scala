@@ -17,7 +17,7 @@ import graft.ml.GbtLogit
   * Ref: final-assignment/src/models/lightgbm_model.py:15-112 (binary
   * objective), teamProject/models/tree_models.py:20-97.
   */
-object R11Queries {
+object R11Queries extends QueryPack {
 
   private val D = 4
   private val Rounds = 3

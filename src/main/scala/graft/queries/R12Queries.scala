@@ -27,7 +27,7 @@ import graft.sim.Similarity
   *    threshold − 1e-4 (quantization error ≤ ~1e-5 for the unit-norm
   *    corpus) and only survivors pay the DECIMAL(30,12)-exact rescore —
   *    mirroring the Spark side's fast-prune/exact-rescore split. */
-object R12Queries {
+object R12Queries extends QueryPack {
 
   private[queries] val SemTargetCluster = 500L
   private[queries] val SemThreshold = 0.999

@@ -25,7 +25,7 @@ import graft.ml.HistGbtR
   * boosted-tree surface); subsample-for-splits is PLANET §4 /
   * LightGBM's histogram-sampling move.
   */
-object R13Queries {
+object R13Queries extends QueryPack {
   private val GbtSubCap = 300L
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

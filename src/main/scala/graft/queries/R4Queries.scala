@@ -11,7 +11,7 @@ import graft.ops.Num.dsum
   * a single-pass aggregation (or partitioned window) with a bit-exact
   * DuckDB oracle.
   */
-object R4Queries {
+object R4Queries extends QueryPack {
   import Sql._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -11,7 +11,7 @@ import graft.ops.{Num, Skew}
   * join partitions, not a groupBy's hash buckets). The naive and salted
   * forms share ONE oracle — the mitigation must be semantically invisible.
   */
-object R5Queries {
+object R5Queries extends QueryPack {
 
   /** Synthetic hot key: user_ids not divisible by 10 collapse to -1, so
     * ~90% of the fact lands on a single aggregation key. */

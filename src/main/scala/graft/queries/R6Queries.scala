@@ -16,7 +16,7 @@ import graft.text.TextOps
   * sorts every row. Same oracle shape as a row_number query: the kept set
   * is exactly ORDER BY score DESC, id ASC LIMIT k per group.
   */
-object R6Queries {
+object R6Queries extends QueryPack {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_w_topk_agg" -> ((s, d) =>

@@ -13,7 +13,7 @@ import graft.text.TextOps
   * full pipeline (IVF probe → per-subspace Lloyd's fits → lookup-table
   * sums → top-k) is hash-checkable against a SQL replay.
   */
-object R7Queries {
+object R7Queries extends QueryPack {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // IVF-PQ ADC search: coarse IVF probe bounds candidates, asymmetric-

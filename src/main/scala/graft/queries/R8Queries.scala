@@ -34,7 +34,7 @@ import graft.ml.GaussianNb
   * independent of the vectors, so the confusion matrix is spread — the
   * point is determinism of the fit/score pipeline, not model quality).
   */
-object R8Queries {
+object R8Queries extends QueryPack {
   private val D = 4 // embedding dims used as NB features
 
   def queries: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(

@@ -37,7 +37,7 @@ import graft.ops.Num.dsum
   *    same survivors. Ref: 1-1.data_processing.ipynb cells 6-11,
   *    1-2.labeling.ipynb cell 3, basecode.ipynb cell 0.
   */
-object R9Queries {
+object R9Queries extends QueryPack {
   private val D = 4 // embedding dims used as NB features
   private val K = 5 // folds
 

@@ -14,7 +14,7 @@ import graft.stats.{Metrics, Tests}
   *   pred       = 1 iff value >= 50            (binary pred)
   *   pseudo     = event_type picked by event_id % 5   (multiclass pred)
   */
-object StatsQueries {
+object StatsQueries extends QueryPack {
   import Sql._
 
   private val types = Seq("click", "view", "signup", "error", "purchase")

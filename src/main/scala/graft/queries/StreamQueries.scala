@@ -9,7 +9,7 @@ import graft.streaming.StreamOps
 /** Event-time windowing queries over `events` — the batch halves of the
   * Structured Streaming operators in graft.streaming (same transforms run
   * under readStream with a watermark; see StreamingSpec). */
-object StreamQueries {
+object StreamQueries extends QueryPack {
   import Sql._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -14,7 +14,7 @@ import graft.sim.Similarity
   * exactly); the LSH join pipelines are rows-only checked here and
   * recall-tested in ScalaTest.
   */
-object TextSimQueries {
+object TextSimQueries extends QueryPack {
   import Sql._
 
   // ---- shared SQL fragments -------------------------------------------

@@ -20,7 +20,7 @@ import graft.ops.Num.dsum
   * so thresholds and ties cut identically on any engine and any partition
   * order.
   */
-object TpchPlusQueries {
+object TpchPlusQueries extends QueryPack {
   import Sql._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

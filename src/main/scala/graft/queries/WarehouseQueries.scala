@@ -11,7 +11,7 @@ import graft.text.TextOps
   * scoring), and a calendar-hierarchy ROLLUP — each one or two shuffles,
   * each with a bit-exact DuckDB oracle.
   */
-object WarehouseQueries {
+object WarehouseQueries extends QueryPack {
   import Sql._
 
   /** The symmetrized, src-partitioned customer↔supplier bipartite edge

@@ -613,7 +613,7 @@ object Similarity {
   }
 
   /** LSH-blocked candidate ID pairs (id_a < id_b, deduped across tables) —
-    * the shared blocking stage of the near-dup variants below. */
+    * the blocking stage of [[cosineNearDupPairsExact]]. */
   def nearDupCandidates(df: DataFrame, nPlanes: Int = 12, nTables: Int = 4,
                         dim: Int = 64, idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
@@ -630,20 +630,10 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs above a threshold, LSH-blocked
-    * (never n² at scale); exact-cosine verified. */
-  def cosineNearDupPairs(df: DataFrame, threshold: Double,
-                         nPlanes: Int = 12, nTables: Int = 4, dim: Int = 64,
-                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    nearDupCandidates(df, nPlanes, nTables, dim, idCol, vecCol)
-      .join(df.select(col(idCol).as("id_a"), col(vecCol).as("va")), Seq("id_a"))
-      .join(df.select(col(idCol).as("id_b"), col(vecCol).as("vb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), cosine(col("va"), col("vb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-
-  /** Oracle-matched variant: the surviving pairs' cosines are accumulated
+    * (never n² at scale). The surviving pairs' cosines are accumulated
     * through DECIMAL(30,12) per-element products (order-independent, bit-
-    * identical to a SQL engine using the same accumulation). The blocking
-    * stage is unchanged; only the few candidate pairs pay the exact path. */
+    * identical to a SQL engine using the same accumulation); only the few
+    * candidate pairs pay the exact path. */
   def cosineNearDupPairsExact(df: DataFrame, threshold: Double,
                               nPlanes: Int = 12, nTables: Int = 4, dim: Int = 64,
                               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

@@ -37,10 +37,6 @@ object TextOps {
     size(filter(toks, t => t.isin(stopwords: _*))) / size(toks).cast("double")
   }
 
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))) /
-      length(text).cast("double")
-
   def alphaRatio(text: Column): Column =
     length(regexp_replace(text, "[^A-Za-z]", "")) / length(text).cast("double")
 
@@ -690,20 +686,6 @@ object TextOps {
   def dupNgramFraction(text: Column, n: Int): Column = {
     val sh = shingles(text, n)
     lit(1.0) - size(array_distinct(sh)) / size(sh).cast("double")
-  }
-
-  /** N-gram-Jaccard near-dup pairs *within small candidate groups* (e.g.
-    * same lang+source): token-sorted-prefix blocking keeps the join from
-    * going n². For unblocked corpora use [[minhashNearDupPairs]]. */
-  def jaccardNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          blockCols: Seq[String], shingleN: Int = 3,
-                          threshold: Double = 0.5): DataFrame = {
-    val l = df.select((blockCols.map(col) :+ col(idCol).as("id_a") :+ col(textCol).as("text_a")): _*)
-    val r = df.select((blockCols.map(col) :+ col(idCol).as("id_b") :+ col(textCol).as("text_b")): _*)
-    l.join(r, blockCols).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccardShingles(col("text_a"), col("text_b"), shingleN).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
   }
 
   /** Exact-substring duplicate pairs: documents sharing at least one run

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** The one place the engine touches `private[sql]` APIs: converting a
-  * catalyst Expression into a public Column (Spark 4 removed the public
-  * constructor when Column became ColumnNode-based), and registering a
-  * native-Expression SQL function on an already-built session. Lives under
+/** The one place the engine touches `private[sql]`/`private[spark]` APIs:
+  * converting a catalyst Expression into a public Column (Spark 4 removed
+  * the public constructor when Column became ColumnNode-based),
+  * registering a native-Expression SQL function on an already-built
+  * session, and draining the listener bus. Lives under
   * org.apache.spark.sql.* solely for access; no Spark internals are
   * modified. */
 object Bridge {
@@ -33,4 +34,11 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** Blocks until every listener event posted so far has been delivered
+    * (a `SparkListener` snapshot taken after this sees all finished
+    * tasks). Throws `TimeoutException` after 60 s rather than reporting
+    * counters that are still missing events. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -142,6 +142,26 @@ class BoostSpec extends AnyFunSuite {
     folded.unpersist()
   }
 
+  test("one-vs-rest GBT handles multiclass") {
+    // three classes separated along f0/f1 by more than their unit noise
+    val u = (c: Int) => graft.ml.Split.hashUniform(
+      concat_ws("#", col("id"), lit(c)), 21)
+    val df = spark.range(450).select(col("id"),
+      pmod(col("id"), lit(3)).cast("double").as("y"),
+      (pmod(col("id"), lit(3)) * 2.0 + u(0)).as("f0"),
+      (pmod(col("id"), lit(3)) * -1.5 + u(1)).as("f1"),
+      u(2).as("f2")).cache()
+    val tagged = graft.ml.Split.tagHoldout(df, "id", 0.25)
+    val model = Boost.fitOvr(tagged.filter(col("split") === "train"),
+      Seq("f0", "f1", "f2"), "y", numClasses = 3, numTrees = 10)
+    val acc = tagged.filter(col("split") === "test")
+      .select(avg(when(model.predictExpr === col("y"), 1.0).otherwise(0.0)))
+      .head().getDouble(0)
+    info(s"ovr-gbt acc=$acc")
+    assert(acc > 0.85)
+    df.unpersist()
+  }
+
   test("degenerate labels yield a near-constant model, no crash") {
     val df = (0 until 200).map(i => (i.toDouble, 1.0)).toDF("x1", "y")
     val m = Boost.fit(df, Seq("x1"), "y", numTrees = 3, maxDepth = 2)

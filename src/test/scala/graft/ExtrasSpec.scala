@@ -2,13 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ml.{Extras, Models, Split}
+import graft.ml.{Extras, Split}
 
 class ExtrasSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** learnable 3-class data with an embedding-array column for KNN. */
+  /** learnable 3-class data. */
   def learnable(n: Int = 600) = {
     val u = (c: Int) => Split.hashUniform(concat_ws("#", col("id"), lit(c)), 21)
     spark.range(n).select(col("id").as("vec_id"),
@@ -16,50 +16,6 @@ class ExtrasSpec extends AnyFunSuite {
       (pmod(col("id"), lit(3)) * 2.0 + u(0)).as("f0"),
       (pmod(col("id"), lit(3)) * -1.5 + u(1)).as("f1"),
       u(2).as("f2"))
-      .withColumn("embedding", array(col("f0"), col("f1"), col("f2"))
-        .cast("array<float>"))
-  }
-
-  test("KNN majority vote classifies mean-separated classes") {
-    val df = learnable().cache()
-    val tagged = Split.tagHoldout(df, "vec_id", 0.2)
-    val train = tagged.filter(col("split") === "train")
-    val queries = tagged.filter(col("split") === "test")
-    val pred = Extras.knnPredict(train, queries, k = 7, "vec_id", "embedding", "y")
-      .join(queries.select("vec_id", "y"), Seq("vec_id"))
-    val acc = pred.filter(col("knn_prediction") === col("y")).count().toDouble /
-      pred.count()
-    info(s"knn acc=$acc")
-    assert(acc > 0.8)
-    df.unpersist()
-  }
-
-  test("one-vs-rest GBT handles multiclass") {
-    val df = learnable(450).cache()
-    val tagged = Split.tagHoldout(df, "vec_id", 0.25)
-    val train = tagged.filter(col("split") === "train")
-    val test = tagged.filter(col("split") === "test")
-    val models = Extras.ovrGbtFit(train, Seq("f0", "f1", "f2"), "y",
-      classes = Seq(0.0, 1.0, 2.0), maxIter = 10)
-    val pred = Extras.ovrGbtPredict(models, test, "vec_id")
-    val acc = pred.filter(col("ovr_prediction") === col("y")).count().toDouble /
-      pred.count()
-    info(s"ovr-gbt acc=$acc")
-    assert(acc > 0.85)
-    df.unpersist()
-  }
-
-  test("permutation importance ranks informative features above noise") {
-    val df = learnable(600).cache()
-    val pipe = Models.pipelineFor(
-      Models.registry(3, 3)("logistic_regression")(), Seq("f0", "f1", "f2"), "y")
-    val fitted = pipe.fit(df)
-    val imp = Extras.permutationImportance(fitted, df, "vec_id", "y",
-      Seq("f0", "f1", "f2"), nRepeats = 2).toMap
-    info(s"importances=$imp")
-    assert(imp("f0") > imp("f2") && imp("f1") > imp("f2"))
-    assert(imp("f0") > 0.1) // shuffling the dominant feature must hurt
-    df.unpersist()
   }
 
   test("permuteColumn preserves the multiset of values") {

@@ -58,6 +58,18 @@ class SplitPrepSpec extends AnyFunSuite {
     assert(filled == 1 + 3 + 5 + 3)
   }
 
+  test("mode imputer: most frequent non-null value, ties to the smallest") {
+    val train = Seq(
+      (Some("b"), Some(3), Option.empty[String]), (Some("a"), Some(1), None),
+      (Some("b"), Some(3), None), (Some("a"), Some(2), None),
+      (None, None, None), (None, Some(3), None), (None, None, None),
+      (Some("c"), None, None)).toDF("c", "n", "empty")
+    // c: a 2, b 2, c 1 (3 nulls ignored) → "a"; n: 3 three times → "3";
+    // an all-null column has no mode
+    assert(Prep.fitModeImputer(train, Seq("c", "n", "empty")) ==
+      Map("c" -> "a", "n" -> "3", "empty" -> null))
+  }
+
   test("standard scaler gives mean≈0 std≈1") {
     val df = (1 to 100).map(_.toDouble).toDF("v")
     val fitted = Prep.fitStandardScaler(df, Seq("v"))

@@ -203,6 +203,23 @@ class StatsSpec extends AnyFunSuite {
     assert(math.abs(macroF1 - (2.0 / 3 + 0.5) / 3) < 1e-6)
   }
 
+  test("combined score is (F1 + AUROC) / 2 at the given threshold") {
+    // the auroc fixture above: AUROC = 20/24
+    val y = Seq(0, 1, 0, 1, 1, 0, 1, 0, 1, 1)
+    val s = Seq(0.2, 0.7, 0.4, 0.8, 0.6, 0.3, 0.9, 0.75, 0.65, 0.55)
+    val df = y.zip(s).toDF("y", "s")
+    def score(t: Double) = {
+      val r = Metrics.combinedScore(df, "y", "s", t).head
+      (r.getAs[Double]("f1"), r.getAs[Double]("auroc"), r.getAs[Double]("score"))
+    }
+    // threshold 0.5: tp 6, fp 1 (0.75), fn 0 → F1 = 12/13
+    val (f1, auc, sc) = score(0.5)
+    assert(math.abs(f1 - 12.0 / 13) < 1e-12 && math.abs(auc - 20.0 / 24) < 1e-12)
+    assert(math.abs(sc - 137.0 / 156) < 1e-12)
+    // threshold 0.7: tp 3, fp 1, fn 3 → F1 = 6/10
+    assert(math.abs(score(0.7)._3 - (0.6 + 20.0 / 24) / 2) < 1e-12)
+  }
+
   test("p-value approximations are sane") {
     assert(math.abs(PValues.normalCdf(1.959963985) - 0.975) < 1e-4)
     assert(math.abs(PValues.twoSidedFromZ(1.959963985) - 0.05) < 1e-3)

@@ -19,8 +19,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config(graft.core.Tables.requiredConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -292,7 +292,7 @@ class TextSimSpec extends AnyFunSuite {
     val e = graft.core.Tables(spark, sfDir, "embeddings").limit(50)
     val doubled = e.unionByName(
       e.select((col("vec_id") + 1000).as("vec_id"), col("embedding"), col("label")))
-    val pairs = Similarity.cosineNearDupPairs(doubled, threshold = 0.999)
+    val pairs = Similarity.cosineNearDupPairsExact(doubled, threshold = 0.999)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // every planted duplicate (id, id+1000) should be found
     val planted = (0 until 50).map(i => (i.toLong, i + 1000L)).toSet
