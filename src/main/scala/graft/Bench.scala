@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -104,14 +105,17 @@ object Bench {
     // the full catalog
     val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
     def keep(name: String) = nameFilter.forall(_.findFirstIn(name).isDefined)
-    // (time_sec, byte+telemetry counters) per query; the counters come
-    // from the min-time iteration
+    // (time_sec, byte+telemetry counters, codegen compiles) per query;
+    // the counters come from the min-time iteration
     val results = SparkEntry.queries.filter(kv => keep(kv._1)).map { case (name, fn) =>
       val runs = (1 to iterations).map { _ =>
         // listener events arrive async: drain so a query's last tasks
         // are not attributed to the next one
         Bridge.drainListenerBus(spark.sparkContext)
         listener.reset()
+        // Janino compiles are JVM-wide (driver and local task threads);
+        // a warm re-run of a query should compile nothing
+        val cg0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
                  catch { case _: Throwable => false }
@@ -120,6 +124,7 @@ object Bench {
         val m = (listener.shuffleRead.get, listener.shuffleWrite.get,
           listener.spill.get, listener.memPeak.get,
           listener.jobs.get, listener.gcMs.get, listener.execRunMs.get)
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cg0
         // queries are independent; drop whatever a pipeline pinned — BOTH
         // layers: clearCache() alone leaves localCheckpoint RDD blocks
         // resident, and 179 queries of accumulated orphans tax every
@@ -127,11 +132,11 @@ object Bench {
         // per-query times inflated 9-26x vs isolated measurement)
         graft.ops.Leaks.sweep(spark)
         // a crashed query reports -1 instead of a normal-looking duration
-        (if (ok) dt else -1.0, m)
+        (if (ok) dt else -1.0, m, compiles)
       }
       val best = runs.minBy(_._1 match { case d if d < 0 => Double.MaxValue; case d => d })
       val t = if (runs.exists(_._1 < 0)) -1.0 else r3(best._1)
-      name -> (t, best._2)
+      name -> (t, best._2, best._3)
     }
     val headline = Vector(
       "q_a1_tpch_q1", "q_a_tpch_q6", "q_j_tpch_q3", "q_j_tpch_q12", "q_j_tpch_q14",
@@ -146,19 +151,19 @@ object Bench {
       "q_s_session", "q_mm_features")
     def toJson(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val times = results.map { case (k, (t, _)) => k -> t }
+    val times = results.map { case (k, (t, _, _)) => k -> t }
     val nFailed = times.count(_._2 < 0)
     val total = r3(times.values.filter(_ >= 0).sum)
     // full artifact: flat time map (backward-compatible) + per-query
     // {time, shuffle_read, shuffle_write, spill} byte metrics
     val metricsJson = results.map {
-      case (k, (t, (sr, sw, sp, mp, nj, gc, er))) =>
+      case (k, (t, (sr, sw, sp, mp, nj, gc, er), cg)) =>
         // machine-classified wall attribution (scheduler|gc|exec|
         // idle-consistent) so a spike in a loaded run is adjudicable
         // from the artifact alone — no human cross-reading of three
         // telemetry fields (round-11 judging did this by hand)
         val bound = BenchGates.bound(t, er, gc, nj, cpus, jobLatencySec)
-        s""""$k":{"time":$t,"shuffle_read":$sr,"shuffle_write":$sw,"spill":$sp,"mem_peak":$mp,"jobs":$nj,"gc_ms":$gc,"exec_run_ms":$er,"bound":"$bound"}"""
+        s""""$k":{"time":$t,"shuffle_read":$sr,"shuffle_write":$sw,"spill":$sp,"mem_peak":$mp,"jobs":$nj,"gc_ms":$gc,"exec_run_ms":$er,"codegen_compiles":$cg,"bound":"$bound"}"""
     }.mkString("{", ",", "}")
     // Budget regression gates: shuffle_budget.json / mem_budget.json hold
     // committed per-query ceilings (seeded from the accepted idle bench of
@@ -199,7 +204,7 @@ object Bench {
         .mkString("{", ",", "}")
     }
     def measuredOf(pick: ((Long, Long, Long, Long, Long, Long, Long)) => Long) =
-      results.map { case (k, (_, m)) => k -> pick(m) }
+      results.map { case (k, (_, m, _)) => k -> pick(m) }
     // shuffle bytes are plan-deterministic: no contention floor. mem_peak
     // is contention-sensitive (BenchGates.contentionFloor doc) — the
     // floor keeps a loaded driver run from burying a real regression

@@ -16,15 +16,29 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session config required to scan the driver's tables. The generator has
-    * emitted `events.ts` as either TIMESTAMP(NANOS) (readable only as a long)
-    * or untagged TIMESTAMP(MICROS) (which Spark 4 would infer as
-    * TIMESTAMP_NTZ — unusable by `unix_micros`/bigint casts). Sessions pin the
-    * timezone to UTC, so reading untagged micros as a regular (LTZ) timestamp
-    * is semantically identical to NTZ and matches the DuckDB oracle. */
+  /** Config every graft session needs (`Session.local`, the tests'
+    * `TestSpark`, the benchmark's session).
+    *
+    * Parquet: the generator has emitted `events.ts` as either
+    * TIMESTAMP(NANOS) (readable only as a long) or untagged
+    * TIMESTAMP(MICROS) (which Spark 4 would infer as TIMESTAMP_NTZ —
+    * unusable by `unix_micros`/bigint casts). Sessions pin the timezone to
+    * UTC, so reading untagged micros as a regular (LTZ) timestamp is
+    * semantically identical to NTZ and matches the DuckDB oracle.
+    *
+    * Codegen class cache: Spark keeps 100 compiled classes by default,
+    * fewer than a handful of catalog queries generate, so re-running a
+    * query recompiled its classes (about 165 per warm pass of the
+    * benchmark's 11-query interactive loop). One full catalog pass
+    * (`graft.Verify` at sf0.01) compiles 3,490 distinct classes; 5,000
+    * entries hold them with headroom. Retained heap grows with the classes
+    * actually cached, not with this bound. This is a static SQL conf: the
+    * first code generation in the JVM fixes the cache size, so it must be
+    * set when the session is built. */
   val requiredConf: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "5000")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph helpers for the dedup pipeline: near-duplicate PAIRS
@@ -30,12 +31,13 @@ object Graph {
     // NOT a getPersistentRDDs before/after diff, which mis-attributes
     // (and later wrongly unpersists) a checkpoint another driver thread
     // registers concurrently (r14: the q_pipe_ep4 semantic/text overlap)
-    (out, org.apache.spark.sql.graftbridge.Bridge.leafRddIds(out))
+    (out, Bridge.leafRddIds(out))
   }
 
   private def unpersistIds(df: DataFrame, ids: Set[Int]): Unit = {
     val sc = df.sparkSession.sparkContext
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
+    ids.foreach(id => sc.getPersistentRDDs.get(id)
+      .foreach(Bridge.unpersistQuietly(_, blocking = true)))
   }
 
   /** Connected components — alternating large-star / small-star

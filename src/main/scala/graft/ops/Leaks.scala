@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Session hygiene between independent pipelines.
   *
@@ -58,10 +59,14 @@ object Leaks {
     out
   }
 
+  /** Releases every persisted RDD except the keepers. Locally
+    * checkpointed ones are released without `RDD.unpersist`'s
+    * per-RDD warning that their lineage is gone: dropping them is the
+    * point of the sweep. */
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keepers.contains(id)) rdd.unpersist(blocking = true)
+      if (!keepers.contains(id)) Bridge.unpersistQuietly(rdd, blocking = true)
     }
   }
 

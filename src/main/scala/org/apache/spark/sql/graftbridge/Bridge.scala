@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * converting a catalyst Expression into a public Column (Spark 4 removed
   * the public constructor when Column became ColumnNode-based),
   * registering a native-Expression SQL function on an already-built
-  * session, and draining the listener bus. Lives under
+  * session, draining the listener bus, and releasing a local checkpoint
+  * without a warning. Lives under
   * org.apache.spark.sql.* solely for access; no Spark internals are
   * modified. */
 object Bridge {
@@ -41,4 +42,16 @@ object Bridge {
     * counters that are still missing events. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** `rdd.unpersist(blocking)` without its WARN for a locally
+    * checkpointed RDD ("lineage has been truncated and cannot be
+    * recomputed after unpersisting"): the same `unpersistRDD` call, for a
+    * caller that releases a checkpoint it is done with on purpose. The
+    * RDD keeps its storage level; a checkpointed RDD cannot be recomputed
+    * after the release either way. */
+  def unpersistQuietly(rdd: org.apache.spark.rdd.RDD[_], blocking: Boolean): Unit =
+    if (rdd.checkpointData.exists(
+          _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking)
+    else rdd.unpersist(blocking)
 }

@@ -7,7 +7,7 @@ import graft.ml.Boost
 /** From-scratch distributed GBDT (SURVEY §2.8 L5): learns a nonlinear
   * target a linear model cannot, and its tree structure is bit-identical
   * under repartitioning (the exact-decimal histogram property). */
-class BoostSpec extends AnyFunSuite {
+class BoostSpec extends AnyFunSuite with ReferenceParity {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 

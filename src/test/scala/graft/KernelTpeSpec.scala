@@ -7,7 +7,7 @@ import graft.ml.{Kernel, Models, Split, Tpe}
 /** Gap-closer tests: RFF rbf-SVM must beat a linear SVM on a radially-
   * separable problem, and TPE must concentrate trials where scores are
   * high while staying deterministic. */
-class KernelTpeSpec extends AnyFunSuite {
+class KernelTpeSpec extends AnyFunSuite with ReferenceParity {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -28,7 +28,7 @@ object WineParitySpec {
   }
 }
 
-class WineParitySpec extends AnyFunSuite {
+class WineParitySpec extends AnyFunSuite with ReferenceParity {
   lazy val spark = TestSpark.spark
 
   val winePath = "/root/reference/wine-classification-dacon/data/train.csv"
