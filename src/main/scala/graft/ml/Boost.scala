@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.DecimalType
 
 /** From-scratch distributed gradient-boosted trees (SURVEY.md §2.8 L5) —
@@ -16,21 +17,25 @@ import org.apache.spark.sql.types.DecimalType
   * Scale + determinism design:
   *  - Features are pre-binned once against exact per-feature quantile
   *    thresholds, so every boosting pass works on small ints.
-  *  - Each tree LEVEL is ONE distributed aggregation: explode (feature,
-  *    bin) pairs, groupBy (node, feature, bin), sum gradients/hessians.
-  *    Only the histogram — O(nodes·features·bins) rows, data-independent —
-  *    reaches the driver; rows never do.
+  *  - Each tree LEVEL is ONE single-stage job, no shuffle: Catalyst
+  *    projects the rows (frontier filter, decimal gradients, bins), each
+  *    task folds its rows into a histogram of (node, feature, bin) sums,
+  *    and `treeAggregate` merges the partials. Only the histogram —
+  *    O(nodes·features·bins) cells, data-independent — reaches the
+  *    driver; rows never do.
   *  - Gradient/hessian sums accumulate through exact decimals, so split
   *    choices (argmax over gains) are IDENTICAL under any partitioning,
   *    executor count, or AQE plan — the property MLlib's double-summed
   *    trees do not have (BoostSpec pins it).
   *  - Prediction compiles the trees into nested when/otherwise column
-  *    expressions — whole-stage-codegen'd, no per-row model object.
+  *    expressions with ONE threshold compare per split — whole-stage-
+  *    codegen'd, no per-row model object.
   */
 object Boost {
 
   sealed trait Node
-  /** Rows with bin(feature) <= bin go left. */
+  /** Rows with bin(feature) <= bin go left: on the raw value, rows with
+    * NOT (x > thresholds(feature)(bin)) — nulls included. */
   case class Split(feature: Int, bin: Int, left: Node, right: Node) extends Node
   case class Leaf(weight: Double) extends Node
 
@@ -38,15 +43,15 @@ object Boost {
                    basePrediction: Double, trees: Seq[Node],
                    valLosses: Seq[Double] = Nil) {
 
-    private def binExpr(i: Int): Column =
-      thresholds(i).foldLeft(lit(0)) { (acc, t) =>
-        acc + when(col(featureCols(i)) > t, 1).otherwise(0)
-      }
-
+    /** Thresholds are sorted and distinct, so bin(x) = #{t : x > t} is
+      * <= b exactly when x > t_b does not hold; a split at bin b >= the
+      * threshold count sends every row left. */
     private def treeExpr(n: Node): Column = n match {
       case Leaf(w) => lit(w)
-      case Split(f, b, l, r) =>
-        when(binExpr(f) <= b, treeExpr(l)).otherwise(treeExpr(r))
+      case Split(f, b, l, r) if b < thresholds(f).length =>
+        when(col(featureCols(f)) > thresholds(f)(b), treeExpr(r))
+          .otherwise(treeExpr(l))
+      case Split(_, _, l, _) => treeExpr(l)
     }
 
     /** Raw margin (log-odds) column. */
@@ -101,45 +106,46 @@ object Boost {
     val probs = (1 until nBins).map(_.toDouble / nBins)
     val pArr = probs.mkString("array(", ", ", ")")
     val qRow = df.select(featureCols.map(c =>
-      expr(s"percentile(`$c`, $pArr)").as(c)): _*).head()
+      expr(s"percentile(`$c`, $pArr)").as(c)) :+
+      count_if(col(labelCol).cast("double").isNull): _*).head()
+    // a null label has no gradient: it would count in the prior's n but
+    // in no gradient sum, and a histogram cell of null labels alone has no
+    // sum at all
+    require(qRow.getLong(featureCols.size) == 0,
+      s"binFeatures: label column '$labelCol' has " +
+        s"${qRow.getLong(featureCols.size)} null (or non-numeric) values")
     val thresholds = featureCols.indices.map { i =>
       // percentile() returns NULL for an all-null column — fail with the
       // column name, not an opaque NPE three calls deeper (a CONSTANT
-      // column is fine: its empty threshold set just makes it unsplittable)
+      // column is fine: all its rows share one bin, so it never splits)
       require(!qRow.isNullAt(i),
         s"binFeatures: feature column '${featureCols(i)}' has no non-null " +
           "values (percentile returned NULL)")
       qRow.getSeq[Double](i).distinct.sorted.toArray
     }
-    def binExpr(i: Int): Column =
-      thresholds(i).foldLeft(lit(0)) { (acc, t) =>
-        acc + when(col(featureCols(i)) > t, 1).otherwise(0)
-      }
-    val binned = df.select(
-        col(labelCol).cast("double").as("__label") +:
-          featureCols.indices.map(i => binExpr(i).as(s"__bin_$i")): _*)
+    val binned = applyBins(df, featureCols, labelCol, thresholds)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (binned, thresholds)
   }
 
   /** Bin a dataset against ALREADY-FITTED thresholds (validation /
-    * scoring data must never re-fit its own quantiles). */
+    * scoring data must never re-fit its own quantiles): the label as the
+    * double `__label`, feature i as `__bin_i`, the number of its
+    * thresholds below the value. */
   private def applyBins(df: DataFrame, featureCols: Seq[String],
                         labelCol: String,
-                        thresholds: Seq[Array[Double]]): DataFrame = {
-    def binExpr(i: Int): Column =
-      thresholds(i).foldLeft(lit(0)) { (acc, t) =>
-        acc + when(col(featureCols(i)) > t, 1).otherwise(0)
-      }
-    df.select(
-      col(labelCol).cast("double").as("__label") +:
-        featureCols.indices.map(i => binExpr(i).as(s"__bin_$i")): _*)
-  }
+                        thresholds: Seq[Array[Double]]): DataFrame =
+    df.select(col(labelCol).cast("double").as("__label") +:
+      featureCols.indices.map { i =>
+        thresholds(i).foldLeft(lit(0)) { (acc, t) =>
+          acc + when(col(featureCols(i)) > t, 1).otherwise(0)
+        }.as(s"__bin_$i")
+      }: _*)
 
   /** Fit `numTrees` depth-`maxDepth` trees on binary labels (0/1).
-    * One aggregation job per tree level; `nBins`-quantile histogram split
-    * finding; `lambda` = L2 leaf regularization; `lr` = shrinkage;
-    * `minChildHess` guards degenerate splits (XGBoost's
+    * One single-stage histogram job per tree level; `nBins`-quantile
+    * histogram split finding; `lambda` = L2 leaf regularization; `lr` =
+    * shrinkage; `minChildHess` guards degenerate splits (XGBoost's
     * min_child_weight). */
   def fit(df: DataFrame, featureCols: Seq[String], labelCol: String,
           numTrees: Int = 10, maxDepth: Int = 3, lr: Double = 0.3,
@@ -175,20 +181,21 @@ object Boost {
     finally { binned.unpersist(); vb.unpersist() }
   }
 
-  private def fitBinned(binnedIn: DataFrame, featureCols: Seq[String],
+  private def fitBinned(binned: DataFrame, featureCols: Seq[String],
                         thresholds: Seq[Array[Double]], numTrees: Int,
                         maxDepth: Int, lr: Double, lambda: Double,
                         minChildHess: Double,
                         valBinned: Option[DataFrame] = None,
                         patience: Int = 0): Model = {
-    val binned = binnedIn
-    val n = binned.count().toDouble
-    val pos = binned.agg(sum("__y")).head().getDouble(0)
+    val prior = binned.agg(count(lit(1)), sum("__y")).head()
+    val n = prior.getLong(0).toDouble
+    val pos = prior.getDouble(1)
     // log-odds prior, clamped away from degenerate all-one/all-zero labels
     val p0 = math.min(1 - 1e-6, math.max(1e-6, pos / n))
     val base = math.log(p0 / (1 - p0))
 
     val nFeat = featureCols.size
+    val width = thresholds.map(_.length).max + 1
     val binCols = featureCols.indices.map(i => col(s"__bin_$i"))
     var marginDf = binned.withColumn("__f", lit(base))
     val trees = scala.collection.mutable.ArrayBuffer.empty[Node]
@@ -208,23 +215,15 @@ object Boost {
 
       // level-wise growth: nodes of the current level, split in lockstep
       var assigned = withGrad.withColumn("__node", lit(0))
-      var frontier = Map(0 -> ())
+      var frontier = Seq(0) // ascending node ids
       val splits = scala.collection.mutable.Map.empty[Int, (Int, Int)]
       val leaves = scala.collection.mutable.Map.empty[Int, Double]
 
       for (level <- 0 until maxDepth if frontier.nonEmpty) {
-        val hist = assigned
-          .filter(col("__node").isin(frontier.keys.toSeq: _*))
-          .select(col("__node"), col("__g"), col("__h"),
-            posexplode(array(binCols: _*)).as(Seq("__feat", "__bin")))
-          .groupBy("__node", "__feat", "__bin")
-          .agg(sum(col("__g").cast(dec)).as("g"), sum(col("__h").cast(dec)).as("h"))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2),
-            BigDecimal(r.getDecimal(3)), BigDecimal(r.getDecimal(4))))
+        val hist = levelHistogram(assigned, frontier, binCols, width)
 
         val byNode = hist.groupBy(_._1)
-        val nextFrontier = scala.collection.mutable.Map.empty[Int, Unit]
+        val nextFrontier = scala.collection.mutable.ArrayBuffer.empty[Int]
         for ((node, rows) <- byNode.toSeq.sortBy(_._1)) {
           // per-feature bin vectors (bins with no rows contribute zero)
           val gTot = rows.filter(_._2 == 0).map(_._4).sum
@@ -251,7 +250,7 @@ object Boost {
           best match {
             case Some((_, f, b)) if level < maxDepth - 1 =>
               splits(node) = (f, b)
-              nextFrontier(2 * node + 1) = (); nextFrontier(2 * node + 2) = ()
+              nextFrontier ++= Seq(2 * node + 1, 2 * node + 2)
             case Some((_, f, b)) => // last level: split, children are leaves
               splits(node) = (f, b)
               val gl = rows.filter(r => r._2 == f && r._3 <= b).map(_._4).sum
@@ -265,7 +264,7 @@ object Boost {
         }
         // reassign rows of split nodes to their children
         if (splits.nonEmpty && nextFrontier.nonEmpty) {
-          val reassign = frontier.keys.toSeq.sorted.foldLeft(col("__node")) {
+          val reassign = frontier.foldLeft(col("__node")) {
             (acc, node) =>
               splits.get(node) match {
                 case Some((f, b)) =>
@@ -277,7 +276,7 @@ object Boost {
           }
           assigned = assigned.withColumn("__node", reassign)
         }
-        frontier = nextFrontier.toMap.map { case (k, _) => k -> () }
+        frontier = nextFrontier.toSeq
       }
 
       // assemble the tree from splits/leaves
@@ -327,6 +326,72 @@ object Boost {
       if (valDf != null && patience > 0) trees.take(math.max(bestIdx, 1))
       else trees
     Model(featureCols, thresholds, base, kept.toSeq, valLosses.toSeq)
+  }
+
+  /** Per-task partial of one tree level's histogram: exact decimal sums
+    * of g and h per (frontier node, feature, bin) cell, in flat arrays
+    * indexed `(slot * nFeat + feature) * width + bin`. A cell stays null
+    * until a row lands in it, so the cells that hold rows are known, as
+    * they would be to a groupBy over the rows; null values are skipped, as
+    * SQL's sum skips them. */
+  private final class LevelHist(cells: Int) extends Serializable {
+    val g = new Array[java.math.BigDecimal](cells)
+    val h = new Array[java.math.BigDecimal](cells)
+
+    def add(c: Int, gv: java.math.BigDecimal, hv: java.math.BigDecimal): Unit = {
+      if (g(c) == null) { g(c) = java.math.BigDecimal.ZERO; h(c) = java.math.BigDecimal.ZERO }
+      if (gv != null) g(c) = g(c).add(gv)
+      if (hv != null) h(c) = h(c).add(hv)
+    }
+
+    def merge(o: LevelHist): LevelHist = {
+      var c = 0
+      while (c < g.length) {
+        if (o.g(c) != null) {
+          if (g(c) == null) { g(c) = o.g(c); h(c) = o.h(c) }
+          else { g(c) = g(c).add(o.g(c)); h(c) = h(c).add(o.h(c)) }
+        }
+        c += 1
+      }
+      this
+    }
+  }
+
+  /** One tree level's histogram: (node, feature, bin, Σg, Σh) for every
+    * cell of the `nodes` frontier that holds rows. One job with one stage
+    * at small partition counts (`treeAggregate` adds a combine stage only
+    * at many partitions): Catalyst projects each row — node filter, the
+    * gradients cast to `dec` (Spark's own rounding), the bins — and each
+    * task folds its rows into a [[LevelHist]]. BigDecimal addition is
+    * exact, so every sum equals SQL's `sum(decimal(30,12))` under any
+    * partitioning. */
+  private def levelHistogram(assigned: DataFrame, nodes: Seq[Int], binCols: Seq[Column],
+                             width: Int): Seq[(Int, Int, Int, BigDecimal, BigDecimal)] = {
+    val rows = assigned.filter(col("__node").isin(nodes: _*))
+      .select((col("__node") +: col("__g").cast(dec) +: col("__h").cast(dec) +: binCols): _*)
+    val nFeat = binCols.size
+    val slot = nodes.zipWithIndex.toMap
+    val (prec, scale) = (dec.precision, dec.scale)
+    val hist = Bridge.withInternalRows(rows, "Boost.levelHistogram") {
+      _.treeAggregate(new LevelHist(nodes.size * nFeat * width))({ (acc, r) =>
+        val g = if (r.isNullAt(1)) null else r.getDecimal(1, prec, scale).toJavaBigDecimal
+        val h = if (r.isNullAt(2)) null else r.getDecimal(2, prec, scale).toJavaBigDecimal
+        val cell0 = slot(r.getInt(0)) * nFeat
+        var f = 0
+        while (f < nFeat) {
+          acc.add((cell0 + f) * width + r.getInt(3 + f), g, h)
+          f += 1
+        }
+        acc
+      }, _ merge _)
+    }
+    for {
+      (node, s) <- nodes.zipWithIndex
+      f <- 0 until nFeat
+      b <- 0 until width
+      c = (s * nFeat + f) * width + b
+      if hist.g(c) != null
+    } yield (node, f, b, BigDecimal(hist.g(c)), BigDecimal(hist.h(c)))
   }
 
   /** One-vs-rest over a SHARED binning (features are quantile-binned and

@@ -8,8 +8,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * converting a catalyst Expression into a public Column (Spark 4 removed
   * the public constructor when Column became ColumnNode-based),
   * registering a native-Expression SQL function on an already-built
-  * session, draining the listener bus, and releasing a local checkpoint
-  * without a warning. Lives under
+  * session, draining the listener bus, running a fold over a plan's
+  * internal rows as a tracked SQL execution, and releasing a local
+  * checkpoint without a warning. Lives under
   * org.apache.spark.sql.* solely for access; no Spark internals are
   * modified. */
 object Bridge {
@@ -42,6 +43,18 @@ object Bridge {
     * counters that are still missing events. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** Runs `body` over the internal rows of `df`'s physical plan as one
+    * SQL execution named `name`, the way a Dataset action runs: query
+    * listeners see it and its planning time is recorded. The rows are
+    * only valid while the iterator that produced them is on them (Spark
+    * reuses row objects), so `body` must fold, not keep them. */
+  def withInternalRows[T](df: org.apache.spark.sql.DataFrame, name: String)(
+      body: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] => T): T = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(
+      body(qe.toRdd))
+  }
 
   /** `rdd.unpersist(blocking)` without its WARN for a locally
     * checkpointed RDD ("lineage has been truncated and cannot be

@@ -1,7 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.CaseWhen
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.ml.Boost
 
 /** From-scratch distributed GBDT (SURVEY §2.8 L5): learns a nonlinear
@@ -47,12 +51,141 @@ class BoostSpec extends AnyFunSuite with ReferenceParity {
 
   test("tree structure is identical under different partitionings") {
     val df = xorData
-    val a = Boost.fit(df.repartition(3), Seq("x1", "x2", "noise"), "y",
-      numTrees = 5, maxDepth = 3)
-    val b = Boost.fit(df.repartition(17), Seq("x1", "x2", "noise"), "y",
-      numTrees = 5, maxDepth = 3)
-    assert(a.describe == b.describe)
-    assert(a.basePrediction == b.basePrediction)
+    def fit(d: DataFrame) =
+      Boost.fit(d, Seq("x1", "x2", "noise"), "y", numTrees = 5, maxDepth = 3)
+    // hash-partitioned on the 0/1 label: at most 2 of its 64 partitions
+    // hold rows, so most per-task histograms stay empty
+    val sparse = df.repartition(64, col("y"))
+    assert(sparse.rdd.mapPartitions(it => Iterator(it.isEmpty)).collect()
+      .count(identity) >= 62)
+    val a = fit(df.repartition(3))
+    for (d <- Seq(df.repartition(17), df.coalesce(1), df.repartition(64), sparse)) {
+      val b = fit(d)
+      assert(a.describe == b.describe)
+      assert(a.basePrediction == b.basePrediction)
+    }
+  }
+
+  test("a tree level is one job: a fit submits fewer jobs than two per level") {
+    // the shuffle form (groupBy(node, feature, bin).collect()) ran two
+    // jobs per level under AQE: the map stage, then the result stage
+    val sc = spark.sparkContext
+    val key = "graft.boostspec.tag"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == "fit")) jobs.incrementAndGet()
+    }
+    val df = xorData
+    def jobsOf(numTrees: Int): Int = {
+      jobs.set(0)
+      sc.setLocalProperty(key, "fit")
+      try Boost.fit(df, Seq("x1", "x2", "noise"), "y", numTrees = numTrees, maxDepth = 2)
+      finally {
+        sc.setLocalProperty(key, null)
+        Bridge.drainListenerBus(sc)
+      }
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    val (two, three) =
+      try (jobsOf(2), jobsOf(3)) finally sc.removeSparkListener(listener)
+    info(s"$three jobs for 3 trees of 2 levels, ${three - two} for the third tree")
+    assert(three < 2 * 3 * 2, s"$three jobs for 3 trees of 2 levels")
+    // the fixed jobs (binning, prior) cancel: what is left is one tree
+    assert(three - two <= 2, s"${three - two} jobs for one tree of 2 levels")
+  }
+
+  /** The scoring form before threshold compares: each split tested its
+    * feature's bin, a sum of one `when` per threshold. */
+  private def binSumMargin(m: Boost.Model): Column = {
+    def bin(i: Int): Column = m.thresholds(i).foldLeft(lit(0)) { (acc, t) =>
+      acc + when(col(m.featureCols(i)) > t, 1).otherwise(0)
+    }
+    def tree(n: Boost.Node): Column = n match {
+      case Boost.Leaf(w) => lit(w)
+      case Boost.Split(f, b, l, r) => when(bin(f) <= b, tree(l)).otherwise(tree(r))
+    }
+    m.trees.map(tree).foldLeft(lit(m.basePrediction))(_ + _)
+  }
+
+  private def splitCount(m: Boost.Model): Int = {
+    def go(n: Boost.Node): Int = n match {
+      case Boost.Leaf(_) => 0
+      case Boost.Split(_, _, l, r) => 1 + go(l) + go(r)
+    }
+    m.trees.map(go).sum
+  }
+
+  /** Every column of `m` scored both ways over rows that put each
+    * feature on every threshold, next to it, at +-0.0, NaN, null, the
+    * infinities and past both ends; doubles must agree bit for bit. */
+  private def assertScoresAsBinSums(m: Boost.Model, name: String): Unit = {
+    def probes(th: Array[Double]): Seq[Option[Double]] =
+      (th.toSeq.flatMap(t => Seq(math.nextDown(t), t, math.nextUp(t))) ++
+        Seq(-0.0, 0.0, Double.NaN, Double.PositiveInfinity,
+          Double.NegativeInfinity, 1e9, -1e9)).map(Some(_)) :+ None
+    val ps = m.thresholds.map(probes)
+    // the first two features cross every pair of probes; the others cycle
+    val rows = for (i <- ps(0).indices; j <- ps(1 % ps.size).indices) yield
+      ps.indices.map {
+        case 0 => ps(0)(i)
+        case 1 => ps(1)(j)
+        case k => ps(k)((i * 7 + j) % ps(k).size)
+      }
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(m.featureCols.map(StructField(_, DoubleType)))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(r => Row.fromSeq(r.map(_.getOrElse(null))))), schema)
+    val refMargin = binSumMargin(m)
+    val refProb = lit(1.0) / (lit(1.0) + exp(-refMargin))
+    val got = df.select(m.marginExpr, refMargin, m.probabilityExpr, refProb,
+      m.predictExpr(), when(refProb >= 0.5, 1.0).otherwise(0.0)).collect()
+    assert(got.length == rows.size)
+    for ((r, k) <- got.zipWithIndex; c <- 0 until 6 by 2) {
+      val (a, b) = (r.getDouble(c), r.getDouble(c + 1))
+      assert(java.lang.Double.doubleToRawLongBits(a) ==
+        java.lang.Double.doubleToRawLongBits(b),
+        s"$name column $c row ${rows(k)}: $a vs bin-sum $b")
+    }
+    // counted in the analyzed plan: a Column converts to catalyst
+    // expressions only there (Bridge.expression wraps it unconverted)
+    val caseWhens = df.select(m.marginExpr).queryExecution.analyzed.expressions
+      .map(_.collect { case _: CaseWhen => 1 }.size).sum
+    assert(caseWhens > 0 && caseWhens <= splitCount(m),
+      s"$name: $caseWhens CaseWhen nodes for ${splitCount(m)} splits")
+  }
+
+  test("scoring compares each split's threshold once, bit-identical to the bin sums") {
+    val df = xorData.withColumn("const", lit(2.5))
+    val fitted = Boost.fit(df, Seq("x1", "x2", "noise", "const"), "y",
+      numTrees = 6, maxDepth = 3, lr = 0.4)
+    assert(splitCount(fitted) > 6, fitted.describe)
+    assertScoresAsBinSums(fitted, "fitted")
+    // hand-built: thresholds holding both zeros, a feature with no
+    // thresholds at all, and splits at and past the last threshold
+    val hand = Boost.Model(Seq("a", "e"), Seq(Array(-1.0, -0.0, 0.0, 3.0), Array.empty),
+      0.25, Seq(
+        Boost.Split(0, 1, Boost.Leaf(-1.0),
+          Boost.Split(0, 2, Boost.Leaf(0.5), Boost.Split(0, 3, Boost.Leaf(2.0), Boost.Leaf(4.0)))),
+        Boost.Split(1, 0, Boost.Split(0, 4, Boost.Leaf(0.125), Boost.Leaf(8.0)), Boost.Leaf(16.0)),
+        Boost.Split(0, 0, Boost.Leaf(0.75), Boost.Leaf(-0.75))))
+    assertScoresAsBinSums(hand, "hand-built")
+  }
+
+  test("a null label fails fast, naming the label column") {
+    // the null-label row is the only one with x2 > 0: its histogram cell
+    // holds no other row
+    val df = (0 until 200).map { i =>
+      (i.toDouble, if (i == 7) 1.0 else 0.0, if (i == 7) None else Some((i % 2).toDouble))
+    }.toDF("x1", "x2", "y")
+    val e = intercept[IllegalArgumentException](
+      Boost.fit(df, Seq("x1", "x2"), "y", numTrees = 2, maxDepth = 2))
+    assert(e.getMessage.contains("label column 'y'"), e.getMessage)
+    val ovr = intercept[IllegalArgumentException](
+      Boost.fitOvr(df, Seq("x1", "x2"), "y", numClasses = 2, numTrees = 2))
+    assert(ovr.getMessage.contains("label column 'y'"), ovr.getMessage)
   }
 
   test("boosting monotonically reduces logistic loss on the training set") {
