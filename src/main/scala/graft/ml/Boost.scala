@@ -1,9 +1,12 @@
 package graft.ml
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{Decimal, DecimalType}
+import scala.reflect.ClassTag
 
 /** From-scratch distributed gradient-boosted trees (SURVEY.md §2.8 L5) —
   * the XGBoost algorithm, not the XGBoost library: second-order (Newton)
@@ -17,12 +20,15 @@ import org.apache.spark.sql.types.DecimalType
   * Scale + determinism design:
   *  - Features are pre-binned once against exact per-feature quantile
   *    thresholds, so every boosting pass works on small ints.
-  *  - Each tree LEVEL is ONE single-stage job, no shuffle: Catalyst
-  *    projects the rows (frontier filter, decimal gradients, bins), each
-  *    task folds its rows into a histogram of (node, feature, bin) sums,
-  *    and `treeAggregate` merges the partials. Only the histogram —
-  *    O(nodes·features·bins) cells, data-independent — reaches the
-  *    driver; rows never do.
+  *  - A fit plans ONE query, the (label, bins) projection of the persisted
+  *    binned frame; every tree level and held-out round reuses its RDD, so
+  *    Catalyst plans and compiles nothing per level.
+  *  - Each tree LEVEL is one single-stage job, no shuffle: per row, a task
+  *    computes the finished trees' margin, the gradients (rounded as
+  *    `CAST(... AS DECIMAL(30,12))` rounds) and the row's node, at up to
+  *    numTrees × maxDepth int compares a row, and folds the frontier's rows
+  *    into (node, feature, bin) sums; the driver merges the partials. Only
+  *    that O(nodes·features·bins) histogram reaches the driver.
   *  - Gradient/hessian sums accumulate through exact decimals, so split
   *    choices (argmax over gains) are IDENTICAL under any partitioning,
   *    executor count, or AQE plan — the property MLlib's double-summed
@@ -91,12 +97,6 @@ object Boost {
     }
   }
 
-  def fitOvr(df: DataFrame, featureCols: Seq[String], labelCol: String,
-             numClasses: Int, numTrees: Int = 20, maxDepth: Int = 3,
-             lr: Double = 0.3, lambda: Double = 1.0, nBins: Int = 16): OvrModel =
-    fitOvrBinned(df, featureCols, labelCol, numClasses, numTrees, maxDepth,
-      lr, lambda, nBins)
-
   /** Quantile-bin the features ONCE (shared by every binary fit an OVR
     * wrapper runs): exact per-feature thresholds from one percentile
     * pass, bins as small ints, label kept raw as `__label`. */
@@ -111,9 +111,7 @@ object Boost {
     // a null label has no gradient: it would count in the prior's n but
     // in no gradient sum, and a histogram cell of null labels alone has no
     // sum at all
-    require(qRow.getLong(featureCols.size) == 0,
-      s"binFeatures: label column '$labelCol' has " +
-        s"${qRow.getLong(featureCols.size)} null (or non-numeric) values")
+    requireLabels("binFeatures", labelCol, qRow.getLong(featureCols.size))
     val thresholds = featureCols.indices.map { i =>
       // percentile() returns NULL for an all-null column — fail with the
       // column name, not an opaque NPE three calls deeper (a CONSTANT
@@ -127,6 +125,10 @@ object Boost {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (binned, thresholds)
   }
+
+  private def requireLabels(where: String, labelCol: String, nulls: Long): Unit =
+    require(nulls == 0,
+      s"$where: label column '$labelCol' has $nulls null (or non-numeric) values")
 
   /** Bin a dataset against ALREADY-FITTED thresholds (validation /
     * scoring data must never re-fit its own quantiles): the label as the
@@ -152,20 +154,21 @@ object Boost {
           lambda: Double = 1.0, nBins: Int = 16,
           minChildHess: Double = 1e-3): Model = {
     val (binned, thresholds) = binFeatures(df, featureCols, labelCol, nBins)
-    try fitBinned(binned.withColumn("__y", col("__label")), featureCols,
-      thresholds, numTrees, maxDepth, lr, lambda, minChildHess)
+    try fitBinned(binned, col("__label"), featureCols, labelCol, thresholds,
+      numTrees, maxDepth, lr, lambda, minChildHess)
     finally binned.unpersist()
   }
 
   /** L15 — GENUINE early stopping (not MLlib's validationIndicatorCol
     * approximation): after every boosting round the held-out logloss is
-    * evaluated (one small aggregate job); training stops once it has not
+    * evaluated (one small fold job); training stops once it has not
     * improved for `earlyStoppingRounds` consecutive rounds, and the
     * returned model is truncated to the best round. Validation features
     * bin against the TRAIN-fitted thresholds (no leakage); per-row losses
     * accumulate through exact decimals, so the stopping round is
     * deterministic under any partitioning. `valLosses` records the curve
-    * (one entry per round actually trained). */
+    * (one entry per round actually trained). A null validation label
+    * fails the fit at the first round. */
   def fitEarlyStop(train: DataFrame, valid: DataFrame,
                    featureCols: Seq[String], labelCol: String,
                    numTrees: Int = 50, earlyStoppingRounds: Int = 5,
@@ -173,54 +176,45 @@ object Boost {
                    nBins: Int = 16, minChildHess: Double = 1e-3): Model = {
     val (binned, thresholds) = binFeatures(train, featureCols, labelCol, nBins)
     val vb = applyBins(valid, featureCols, labelCol, thresholds)
-      .withColumn("__y", col("__label"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try fitBinned(binned.withColumn("__y", col("__label")), featureCols,
-      thresholds, numTrees, maxDepth, lr, lambda, minChildHess,
+    try fitBinned(binned, col("__label"), featureCols, labelCol, thresholds,
+      numTrees, maxDepth, lr, lambda, minChildHess,
       valBinned = Some(vb), patience = earlyStoppingRounds)
     finally { binned.unpersist(); vb.unpersist() }
   }
 
-  private def fitBinned(binned: DataFrame, featureCols: Seq[String],
-                        thresholds: Seq[Array[Double]], numTrees: Int,
-                        maxDepth: Int, lr: Double, lambda: Double,
-                        minChildHess: Double,
-                        valBinned: Option[DataFrame] = None,
+  /** Boosts on the binned frame with `y` as the label; every fold reads one
+    * projection per frame (`__y`, then the bins), planned once. */
+  private def fitBinned(binned: DataFrame, y: Column, featureCols: Seq[String],
+                        labelCol: String, thresholds: Seq[Array[Double]],
+                        numTrees: Int, maxDepth: Int, lr: Double, lambda: Double,
+                        minChildHess: Double, valBinned: Option[DataFrame] = None,
                         patience: Int = 0): Model = {
-    val prior = binned.agg(count(lit(1)), sum("__y")).head()
-    val n = prior.getLong(0).toDouble
-    val pos = prior.getDouble(1)
+    val nFeat = featureCols.size
+    def project(df: DataFrame, label: Column): DataFrame =
+      df.select(label.as("__y") +: (0 until nFeat).map(i => col(s"__bin_$i")): _*)
+    val train = project(binned, y)
+    val held = valBinned.map(project(_, col("__label")))
+    val prior = train.agg(count(lit(1)), sum("__y")).head()
+    val (n, pos) = (prior.getLong(0).toDouble, prior.getDouble(1))
     // log-odds prior, clamped away from degenerate all-one/all-zero labels
     val p0 = math.min(1 - 1e-6, math.max(1e-6, pos / n))
     val base = math.log(p0 / (1 - p0))
 
-    val nFeat = featureCols.size
     val width = thresholds.map(_.length).max + 1
-    val binCols = featureCols.indices.map(i => col(s"__bin_$i"))
-    var marginDf = binned.withColumn("__f", lit(base))
     val trees = scala.collection.mutable.ArrayBuffer.empty[Node]
-    var valDf = valBinned.map(_.withColumn("__f", lit(base))).orNull
     val valLosses = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var bestLoss = Double.MaxValue
-    var bestIdx = 0
-    var stop = false
+    var (bestLoss, bestIdx, stop) = (Double.MaxValue, 0, false)
 
     for (treeIdx <- 1 to numTrees if !stop) {
-      // Newton gradients on the logistic objective (row-local → exact
-      // reproducibility; only their SUMS need order-independence)
-      val withGrad = marginDf
-        .withColumn("__p", lit(1.0) / (lit(1.0) + exp(-col("__f"))))
-        .withColumn("__g", col("__p") - col("__y"))
-        .withColumn("__h", col("__p") * (lit(1.0) - col("__p")))
-
       // level-wise growth: nodes of the current level, split in lockstep
-      var assigned = withGrad.withColumn("__node", lit(0))
       var frontier = Seq(0) // ascending node ids
       val splits = scala.collection.mutable.Map.empty[Int, (Int, Int)]
       val leaves = scala.collection.mutable.Map.empty[Int, Double]
 
       for (level <- 0 until maxDepth if frontier.nonEmpty) {
-        val hist = levelHistogram(assigned, frontier, binCols, width)
+        val hist = levelHistogram(train, base, trees.toVector, splits.toMap,
+          frontier, nFeat, width)
 
         val byNode = hist.groupBy(_._1)
         val nextFrontier = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -262,20 +256,6 @@ object Boost {
               leaves(node) = -gTot.toDouble / (hTot.toDouble + lambda) * lr
           }
         }
-        // reassign rows of split nodes to their children
-        if (splits.nonEmpty && nextFrontier.nonEmpty) {
-          val reassign = frontier.foldLeft(col("__node")) {
-            (acc, node) =>
-              splits.get(node) match {
-                case Some((f, b)) =>
-                  when(col("__node") === node,
-                    when(binCols(f) <= b, 2 * node + 1).otherwise(2 * node + 2))
-                    .otherwise(acc)
-                case None => acc
-              }
-          }
-          assigned = assigned.withColumn("__node", reassign)
-        }
         frontier = nextFrontier.toSeq
       }
 
@@ -288,52 +268,58 @@ object Boost {
             case None => Leaf(0.0) // unreachable guard
           }
         }
-      val tree = build(0)
-      trees += tree
+      trees += build(0)
 
-      // margin update via the compiled tree expression (codegen'd)
-      def treeCol(nd: Node): Column = nd match {
-        case Leaf(w) => lit(w)
-        case Split(f, b, l, r) =>
-          when(binCols(f) <= b, treeCol(l)).otherwise(treeCol(r))
-      }
-      marginDf = marginDf.withColumn("__f", col("__f") + treeCol(tree))
-        .select((Seq(col("__y"), col("__f")) ++ binCols): _*)
-      // truncate the growing when-chain lineage every few trees (an eager
-      // checkpoint is one extra job; every tree was measured 2× slower)
-      if (treeIdx % 4 == 0 && treeIdx < numTrees)
-        marginDf = marginDf.localCheckpoint(true)
-
-      // early stopping: held-out logloss after this round (decimal-summed
-      // → the stopping decision is partitioning-independent)
-      if (valDf != null) {
-        valDf = valDf.withColumn("__f", col("__f") + treeCol(tree))
-          .select((Seq(col("__y"), col("__f")) ++ binCols): _*)
-        if (treeIdx % 4 == 0) valDf = valDf.localCheckpoint(true)
-        val p = lit(1.0) / (lit(1.0) + exp(-col("__f")))
-        val pc = least(lit(1.0 - 1e-15), greatest(lit(1e-15), p))
-        val row = valDf.select(
-          sum((-(col("__y") * log(pc) +
-            (lit(1.0) - col("__y")) * log(lit(1.0) - pc))).cast(dec)).as("s"),
-          count(lit(1)).as("n")).head()
-        val loss = BigDecimal(row.getDecimal(0)).toDouble / row.getLong(1)
+      // early stopping: held-out logloss after this round (decimal-summed)
+      for (vr <- held) {
+        val parts = runFold(vr, "Boost.heldOutLoss", new LossFold(base, trees.toVector))
+        requireLabels("fitEarlyStop (validation frame)", labelCol, parts.map(_._3).sum)
+        val sum = parts.map(_._1).foldLeft(java.math.BigDecimal.ZERO)(_ add _)
+        val loss = BigDecimal(sum).toDouble / parts.map(_._2).sum
         valLosses += loss
         if (loss < bestLoss - 1e-12) { bestLoss = loss; bestIdx = treeIdx }
         else if (patience > 0 && treeIdx - bestIdx >= patience) stop = true
       }
     }
-    val kept =
-      if (valDf != null && patience > 0) trees.take(math.max(bestIdx, 1))
-      else trees
+    val kept = if (held.nonEmpty && patience > 0) trees.take(math.max(bestIdx, 1)) else trees
     Model(featureCols, thresholds, base, kept.toSeq, valLosses.toSeq)
   }
 
+  /** `d` as Spark's `CAST(d AS DECIMAL(30,12))` evaluates it: `Decimal(d)`
+    * (the double's shortest decimal string) rounded HALF_UP to 12 places;
+    * NaN and the infinities become null, an overflow fails. */
+  private[graft] def toDec(d: Double): java.math.BigDecimal =
+    if (d.isNaN || d.isInfinite) null
+    else {
+      val v = Decimal(d)
+      require(v.changePrecision(dec.precision, dec.scale), s"$d overflows $dec")
+      v.toJavaBigDecimal
+    }
+
+  /** Leaf weight of a projected row (`__y`, bins): left when bin <= b. */
+  @annotation.tailrec
+  private def leafOf(n: Node, r: InternalRow): Double = n match {
+    case Leaf(w) => w
+    case Split(f, b, l, rt) => leafOf(if (r.getInt(1 + f) <= b) l else rt, r)
+  }
+
+  /** P(label = 1) of a projected row with [[Model.probabilityExpr]]'s
+    * arithmetic: leaves added in tree order; Spark's `exp` is StrictMath's. */
+  private def probability(base: Double, trees: Seq[Node], r: InternalRow): Double =
+    1.0 / (1.0 + StrictMath.exp(-trees.foldLeft(base)(_ + leafOf(_, r))))
+
+  /** Node of a projected row in the tree being grown, via its splits so far. */
+  @annotation.tailrec
+  private def nodeOf(splits: Map[Int, (Int, Int)], node: Int, r: InternalRow): Int =
+    splits.get(node) match {
+      case Some((f, b)) => nodeOf(splits, 2 * node + (if (r.getInt(1 + f) <= b) 1 else 2), r)
+      case None => node
+    }
+
   /** Per-task partial of one tree level's histogram: exact decimal sums
-    * of g and h per (frontier node, feature, bin) cell, in flat arrays
-    * indexed `(slot * nFeat + feature) * width + bin`. A cell stays null
-    * until a row lands in it, so the cells that hold rows are known, as
-    * they would be to a groupBy over the rows; null values are skipped, as
-    * SQL's sum skips them. */
+    * of g and h per (frontier node, feature, bin) cell, indexed
+    * `(slot * nFeat + feature) * width + bin`. A cell stays null until a
+    * row lands in it; null values are skipped, as SQL's sum skips them. */
   private final class LevelHist(cells: Int) extends Serializable {
     val g = new Array[java.math.BigDecimal](cells)
     val h = new Array[java.math.BigDecimal](cells)
@@ -345,67 +331,79 @@ object Boost {
     }
 
     def merge(o: LevelHist): LevelHist = {
-      var c = 0
-      while (c < g.length) {
-        if (o.g(c) != null) {
-          if (g(c) == null) { g(c) = o.g(c); h(c) = o.h(c) }
-          else { g(c) = g(c).add(o.g(c)); h(c) = h(c).add(o.h(c)) }
-        }
-        c += 1
-      }
+      for (c <- g.indices if o.g(c) != null) add(c, o.g(c), o.h(c))
       this
     }
   }
 
-  /** One tree level's histogram: (node, feature, bin, Σg, Σh) for every
-    * cell of the `nodes` frontier that holds rows. One job with one stage
-    * at small partition counts (`treeAggregate` adds a combine stage only
-    * at many partitions): Catalyst projects each row — node filter, the
-    * gradients cast to `dec` (Spark's own rounding), the bins — and each
-    * task folds its rows into a [[LevelHist]]. BigDecimal addition is
-    * exact, so every sum equals SQL's `sum(decimal(30,12))` under any
-    * partitioning. */
-  private def levelHistogram(assigned: DataFrame, nodes: Seq[Int], binCols: Seq[Column],
-                             width: Int): Seq[(Int, Int, Int, BigDecimal, BigDecimal)] = {
-    val rows = assigned.filter(col("__node").isin(nodes: _*))
-      .select((col("__node") +: col("__g").cast(dec) +: col("__h").cast(dec) +: binCols): _*)
-    val nFeat = binCols.size
-    val slot = nodes.zipWithIndex.toMap
-    val (prec, scale) = (dec.precision, dec.scale)
-    val hist = Bridge.withInternalRows(rows, "Boost.levelHistogram") {
-      _.treeAggregate(new LevelHist(nodes.size * nFeat * width))({ (acc, r) =>
-        val g = if (r.isNullAt(1)) null else r.getDecimal(1, prec, scale).toJavaBigDecimal
-        val h = if (r.isNullAt(2)) null else r.getDecimal(2, prec, scale).toJavaBigDecimal
-        val cell0 = slot(r.getInt(0)) * nFeat
-        var f = 0
-        while (f < nFeat) {
-          acc.add((cell0 + f) * width + r.getInt(3 + f), g, h)
-          f += 1
-        }
-        acc
-      }, _ merge _)
+  /** A task's fold over its partition of a projection: a named class, as
+    * Spark's closure cleaner re-parses a lambda's defining class per job. */
+  private abstract class Fold[U] extends ((TaskContext, Iterator[InternalRow]) => U)
+    with Serializable
+
+  /** `fold` over every partition of `rows`: one SQL execution, one job. */
+  private def runFold[U: ClassTag](rows: DataFrame, name: String, fold: Fold[U]): Array[U] =
+    Bridge.withInternalRows(rows, name)(rdd => rdd.sparkContext.runJob(rdd, fold))
+
+  /** Folds the Newton gradients of a task's frontier rows (frontier node →
+    * `slot`), rounded by [[toDec]], into a [[LevelHist]]. */
+  private final class LevelFold(base: Double, trees: Seq[Node], splits: Map[Int, (Int, Int)],
+                                slot: Map[Int, Int], nFeat: Int, width: Int)
+      extends Fold[LevelHist] {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): LevelHist = {
+      val acc = new LevelHist(slot.size * nFeat * width)
+      for (r <- rows; s <- slot.get(nodeOf(splits, 0, r))) {
+        val p = probability(base, trees, r)
+        val g = toDec(p - r.getDouble(0))
+        val h = toDec(p * (1.0 - p))
+        for (f <- 0 until nFeat) acc.add((s * nFeat + f) * width + r.getInt(1 + f), g, h)
+      }
+      acc
     }
-    for {
-      (node, s) <- nodes.zipWithIndex
-      f <- 0 until nFeat
-      b <- 0 until width
-      c = (s * nFeat + f) * width + b
-      if hist.g(c) != null
-    } yield (node, f, b, BigDecimal(hist.g(c)), BigDecimal(hist.h(c)))
+  }
+
+  /** One tree level's histogram: (node, feature, bin, Σg, Σh) for every
+    * cell of the `nodes` frontier that holds rows, from one [[LevelFold]]
+    * job. BigDecimal addition is exact, so every sum equals SQL's
+    * `sum(decimal(30,12))` under any partitioning. */
+  private def levelHistogram(rows: DataFrame, base: Double, trees: Seq[Node],
+                             splits: Map[Int, (Int, Int)], nodes: Seq[Int], nFeat: Int,
+                             width: Int): Seq[(Int, Int, Int, BigDecimal, BigDecimal)] = {
+    val hist = runFold(rows, "Boost.levelHistogram",
+      new LevelFold(base, trees, splits, nodes.zipWithIndex.toMap, nFeat, width))
+      .foldLeft(new LevelHist(nodes.size * nFeat * width))(_ merge _)
+    for ((node, s) <- nodes.zipWithIndex; f <- 0 until nFeat; b <- 0 until width;
+         c = (s * nFeat + f) * width + b if hist.g(c) != null)
+      yield (node, f, b, BigDecimal(hist.g(c)), BigDecimal(hist.h(c)))
+  }
+
+  /** A task's held-out partial: the exact sum of its labelled rows' losses,
+    * each rounded by [[toDec]] (Spark's `log` is StrictMath's), their count,
+    * and the count of null labels. */
+  private final class LossFold(base: Double, trees: Seq[Node])
+      extends Fold[(java.math.BigDecimal, Long, Long)] {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): (java.math.BigDecimal, Long, Long) = {
+      var (sum, n, nulls) = (java.math.BigDecimal.ZERO, 0L, 0L)
+      for (r <- rows) if (r.isNullAt(0)) nulls += 1 else {
+        val y = r.getDouble(0)
+        val p = math.min(1.0 - 1e-15, math.max(1e-15, probability(base, trees, r)))
+        val loss = toDec(-(y * StrictMath.log(p) + (1.0 - y) * StrictMath.log(1.0 - p)))
+        if (loss != null) sum = sum.add(loss)
+        n += 1
+      }
+      (sum, n, nulls)
+    }
   }
 
   /** One-vs-rest over a SHARED binning (features are quantile-binned and
     * persisted once, not once per class). */
-  private def fitOvrBinned(df: DataFrame, featureCols: Seq[String],
-                           labelCol: String, numClasses: Int, numTrees: Int,
-                           maxDepth: Int, lr: Double, lambda: Double,
-                           nBins: Int): OvrModel = {
+  def fitOvr(df: DataFrame, featureCols: Seq[String], labelCol: String,
+             numClasses: Int, numTrees: Int = 20, maxDepth: Int = 3,
+             lr: Double = 0.3, lambda: Double = 1.0, nBins: Int = 16): OvrModel = {
     val (binned, thresholds) = binFeatures(df, featureCols, labelCol, nBins)
-    // the per-class binary fits are independent chains over the SAME
-    // persisted binned frame — run them concurrently (guide §2.6: actions
-    // are only sequential because the driver calls them sequentially).
-    // Each fit is deterministic, so the model sequence is identical to
-    // the sequential loop.
+    // the per-class fits are independent chains over the SAME persisted
+    // binned frame — run them concurrently (guide §2.6); each is
+    // deterministic, so the models equal the sequential loop's.
     import scala.concurrent._
     import scala.concurrent.duration._
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -413,9 +411,8 @@ object Boost {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try OvrModel(Await.result(
       Future.sequence((0 until numClasses).map { k =>
-        Future(fitBinned(binned.withColumn("__y",
-            (col("__label") === k.toDouble).cast("double")),
-          featureCols, thresholds, numTrees, maxDepth, lr, lambda, 1e-3))
+        Future(fitBinned(binned, (col("__label") === k.toDouble).cast("double"),
+          featureCols, labelCol, thresholds, numTrees, maxDepth, lr, lambda, 1e-3))
       }), Duration.Inf))
     finally { pool.shutdown(); binned.unpersist() }
   }

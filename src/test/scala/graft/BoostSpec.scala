@@ -28,6 +28,64 @@ class BoostSpec extends AnyFunSuite with ReferenceParity {
     rows.toDF("x1", "x2", "noise", "y")
   }
 
+  /** Every split, leaf weight (`java.lang.Double.toString`) and held-out
+    * loss of `m`, one line per tree, after a line for the prior and one
+    * for the loss curve. */
+  private def exactLines(name: String, m: Boost.Model): Seq[String] = {
+    def go(n: Boost.Node): String = n match {
+      case Boost.Leaf(w) => s"L(${java.lang.Double.toString(w)})"
+      case Boost.Split(f, b, l, r) => s"S($f<=$b,${go(l)},${go(r)})"
+    }
+    Seq(s"# $name base=${java.lang.Double.toString(m.basePrediction)} trees=${m.trees.size}",
+      "valLosses=" + m.valLosses.map(java.lang.Double.toString).mkString(",")) ++
+      m.trees.map(go)
+  }
+
+  /** Held-out frame whose labels do not depend on the features. */
+  private def noiseValid(n: Int) = (0 until n).map { i =>
+    val x1 = ((i * 37) % 201 - 100) / 100.0 + 0.001
+    val x2 = ((i * 89) % 201 - 100) / 100.0 + 0.001
+    (x1, x2, (((i * 13) % 7) - 3).toDouble, Option((i % 2).toDouble))
+  }.toDF("x1", "x2", "noise", "y")
+
+  /** Three classes separated along f0/f1 by more than their unit noise. */
+  private def threeClasses = {
+    val u = (c: Int) => graft.ml.Split.hashUniform(
+      concat_ws("#", col("id"), lit(c)), 21)
+    spark.range(450).select(col("id"),
+      pmod(col("id"), lit(3)).cast("double").as("y"),
+      (pmod(col("id"), lit(3)) * 2.0 + u(0)).as("f0"),
+      (pmod(col("id"), lit(3)) * -1.5 + u(1)).as("f1"),
+      u(2).as("f2"))
+  }
+
+  test("golden fits: every split, leaf weight and held-out loss is pinned exactly") {
+    // the reference values in boost-golden.txt were recorded from the
+    // per-level SQL form of the fit (gradients and held-out losses cast to
+    // DECIMAL(30,12) by Catalyst), which the task-side fold must reproduce
+    val feats = Seq("x1", "x2", "noise")
+    val wide = xorData.withColumn("s", sin(col("x1") * 7.0 + col("x2"))).repartition(5)
+    val fitted = Boost.fit(wide, feats :+ "s", "y", numTrees = 12, maxDepth = 4)
+    val stopped = Boost.fitEarlyStop(xorData, noiseValid(500), feats, "y",
+      numTrees = 25, earlyStoppingRounds = 3, maxDepth = 2, lr = 0.4)
+    assert(stopped.valLosses.size < 25 && stopped.trees.size < stopped.valLosses.size)
+    val full = Boost.fitEarlyStop(xorData.repartition(3), xorData.limit(400), feats, "y",
+      numTrees = 6, earlyStoppingRounds = 3, maxDepth = 3)
+    assert(full.valLosses.size == 6 && full.trees.size == 6)
+    val ovr = Boost.fitOvr(threeClasses.repartition(4), Seq("f0", "f1", "f2"), "y",
+      numClasses = 3, numTrees = 10)
+    val got = exactLines("fit 12x4, 5 partitions", fitted) ++
+      exactLines("fitEarlyStop, stops early", stopped) ++
+      exactLines("fitEarlyStop, all rounds", full) ++
+      ovr.models.zipWithIndex.flatMap { case (m, k) => exactLines(s"fitOvr class $k", m) }
+    val src = scala.io.Source.fromResource("graft/boost-golden.txt")
+    val want = try src.getLines().toVector finally src.close()
+    val diff = got.indices.find(i => i >= want.size || got(i) != want(i))
+    assert(diff.isEmpty && got.size == want.size, diff.fold(s"${got.size} lines, want ${want.size}") {
+      i => s"line ${i + 1}:\n got  ${got(i)}\n want ${want.lift(i).getOrElse("<none>")}"
+    })
+  }
+
   test("GBDT learns XOR (nonlinear) to >95% where logistic regression is ~chance") {
     val df = xorData
     val model = Boost.fit(df, Seq("x1", "x2", "noise"), "y",
@@ -94,6 +152,65 @@ class BoostSpec extends AnyFunSuite with ReferenceParity {
     assert(three < 2 * 3 * 2, s"$three jobs for 3 trees of 2 levels")
     // the fixed jobs (binning, prior) cancel: what is left is one tree
     assert(three - two <= 2, s"${three - two} jobs for one tree of 2 levels")
+  }
+
+  test("the task-side decimal rounding is Spark's CAST(double AS DECIMAL(30,12))") {
+    import org.apache.spark.sql.types.DecimalType
+    val dec = DecimalType(30, 12)
+    // ties at the 12th decimal, as short decimal strings: the exact binary
+    // value lies on either side of the tie
+    val ties = Seq(5e-13, 1.5e-12, 2.5e-12, 0.1234567890125, 0.2500000000005,
+      0.0625000000005, 0.3333333333335, 0.6666666666665, 0.9999999999995,
+      0.0000000001235, 24.1234567890125, 34.9999999999995)
+    // what the fit rounds: gradients |g| <= 1, hessians <= 0.25, losses <= 35
+    val fitted = (1 to 120).flatMap { i =>
+      val p = 1.0 / (1.0 + StrictMath.exp(-(i - 60) / 4.3))
+      Seq(p, p - 1.0, p * (1.0 - p), -StrictMath.log(p), -StrictMath.log(1.0 - p))
+    }
+    val values = ties ++ ties.map(-_) ++ fitted ++ Seq(0.0, -0.0,
+      java.lang.Double.MIN_VALUE, -java.lang.Double.MIN_VALUE, java.lang.Double.MIN_NORMAL,
+      math.nextDown(java.lang.Double.MIN_NORMAL), math.nextDown(1.0), -math.nextDown(1.0),
+      1.0, -1.0, 0.25, math.nextDown(0.25), -StrictMath.log(1e-15), 35.0,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val byColumn = values.map(Tuple1(_)).toDF("d").select(col("d").cast(dec))
+      .collect().map(r => Option(r.getDecimal(0))).toSeq
+    val byLiteral = spark.range(1).select(values.map(v => lit(v).cast(dec)): _*)
+      .head().toSeq.map(v => Option(v.asInstanceOf[java.math.BigDecimal]))
+    assert(byColumn == byLiteral)
+    for ((v, want) <- values.zip(byColumn))
+      assert(Option(Boost.toDec(v)) == want, s"$v: ${Boost.toDec(v)}, Spark $want")
+    // the values tell the double's exact binary value from its decimal
+    // string: a helper rounding new BigDecimal(double) disagrees
+    val exactBinary = values.map(v => scala.util.Try(new java.math.BigDecimal(v)
+      .setScale(12, java.math.RoundingMode.HALF_UP)).toOption)
+    assert(exactBinary.zip(byColumn).count { case (a, b) => a != b } > 0)
+  }
+
+  test("a fit plans a fixed number of queries, whatever its tree count") {
+    // every tree level folds over one projection planned once per fit: a
+    // plan per level added at least two queries with each tree
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = java.util.Collections.synchronizedSet(java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[QueryExecution, java.lang.Boolean]))
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.exists(_.output.exists(_.name == "qplan_x1"))) seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val df = xorData.withColumnRenamed("x1", "qplan_x1")
+    def queriesOf(numTrees: Int): Int = {
+      Bridge.drainListenerBus(spark.sparkContext)
+      seen.clear()
+      Boost.fit(df, Seq("qplan_x1", "x2", "noise"), "y", numTrees = numTrees, maxDepth = 2)
+      Bridge.drainListenerBus(spark.sparkContext)
+      seen.size
+    }
+    spark.listenerManager.register(listener)
+    val (two, three) =
+      try (queriesOf(2), queriesOf(3)) finally spark.listenerManager.unregister(listener)
+    info(s"$two queries for 2 trees, $three for 3")
+    assert(two > 0 && two == three, s"$two queries for 2 trees, $three for 3")
   }
 
   /** The scoring form before threshold compares: each split tested its
@@ -188,6 +305,19 @@ class BoostSpec extends AnyFunSuite with ReferenceParity {
     assert(ovr.getMessage.contains("label column 'y'"), ovr.getMessage)
   }
 
+  test("a null label in the held-out frame fails early stopping, naming the label column") {
+    // the held-out loss used to divide its sum by a row count that took in
+    // the null-label rows the sum skipped: these 100 rows on 500 shrank
+    // every loss by exactly 5/6
+    val nulls = (0 until 100).map(_ => (0.5, 0.5, 0.0, Option.empty[Double]))
+      .toDF("x1", "x2", "noise", "y")
+    val e = intercept[IllegalArgumentException](
+      Boost.fitEarlyStop(xorData, noiseValid(500).union(nulls), Seq("x1", "x2", "noise"), "y",
+        numTrees = 3, earlyStoppingRounds = 2, maxDepth = 2))
+    assert(e.getMessage.contains("label column 'y'"), e.getMessage)
+    assert(e.getMessage.contains("100 null"), e.getMessage)
+  }
+
   test("boosting monotonically reduces logistic loss on the training set") {
     val df = xorData
     val model = Boost.fit(df, Seq("x1", "x2", "noise"), "y",
@@ -210,12 +340,7 @@ class BoostSpec extends AnyFunSuite with ReferenceParity {
     // validation labels independent of the features: any confidence the
     // booster gains on train RAISES held-out logloss, so the stop must
     // trigger long before numTrees
-    val valid = (0 until 500).map { i =>
-      val x1 = ((i * 37) % 201 - 100) / 100.0 + 0.001
-      val x2 = ((i * 89) % 201 - 100) / 100.0 + 0.001
-      (x1, x2, (((i * 13) % 7) - 3).toDouble, (i % 2).toDouble)
-    }.toDF("x1", "x2", "noise", "y")
-    val m = Boost.fitEarlyStop(train, valid, Seq("x1", "x2", "noise"), "y",
+    val m = Boost.fitEarlyStop(train, noiseValid(500), Seq("x1", "x2", "noise"), "y",
       numTrees = 25, earlyStoppingRounds = 3, maxDepth = 2, lr = 0.4)
     assert(m.valLosses.nonEmpty)
     assert(m.valLosses.size < 25, s"never stopped: ${m.valLosses}")
@@ -276,14 +401,7 @@ class BoostSpec extends AnyFunSuite with ReferenceParity {
   }
 
   test("one-vs-rest GBT handles multiclass") {
-    // three classes separated along f0/f1 by more than their unit noise
-    val u = (c: Int) => graft.ml.Split.hashUniform(
-      concat_ws("#", col("id"), lit(c)), 21)
-    val df = spark.range(450).select(col("id"),
-      pmod(col("id"), lit(3)).cast("double").as("y"),
-      (pmod(col("id"), lit(3)) * 2.0 + u(0)).as("f0"),
-      (pmod(col("id"), lit(3)) * -1.5 + u(1)).as("f1"),
-      u(2).as("f2")).cache()
+    val df = threeClasses.cache()
     val tagged = graft.ml.Split.tagHoldout(df, "id", 0.25)
     val model = Boost.fitOvr(tagged.filter(col("split") === "train"),
       Seq("f0", "f1", "f2"), "y", numClasses = 3, numTrees = 10)
